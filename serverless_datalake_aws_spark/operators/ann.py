@@ -1,21 +1,32 @@
-"""Parameterized IVF-PQ approximate-nearest-neighbor search.
+"""IVF-PQ approximate-nearest-neighbor search — the one implementation.
 
-The production face of the s21/s22 plan entries
-(plans/similarity5.py): the same algorithm with cells / nprobe /
-codebook sizes as ARGUMENTS, split into build / probe / score stages
-so an index can be built once, persisted, and queried many times —
-the FAISS deployment lifecycle. s21 delegates here with its
-oracle-pinned constants (C=8, nprobe=2), so the DuckDB value oracle
-keeps guarding this exact code path; tools/scale_probe_ann.py drives
-the same functions at 2M vectors / 64+ cells to measure that query
-cost scales with PROBED CELLS, not corpus size (VERDICT r6 item 6).
+Every IVF-PQ plan entry in plans/similarity5.py runs through this
+module with its oracle-pinned constants (C=8 cells, nprobe=2), so the
+DuckDB value oracles guard this exact code path:
 
-Determinism contract (shared with similarity5): codebooks are taken
-from the data itself (first n_cells vectors = coarse centroids, s05
-convention; every stride-th vector = PQ codebook rows), and every
-distance is rounded to 6 dp before any argmin/sum boundary, so any
-engine — DuckDB included — replays cells, codes and rank order
-bit-identically.
+- s21 (raw IVF-PQ) and s22 (residual IVF-PQ) are one `ivf_pq_search`
+  call each; they differ only in `pq_codebooks(residual=...)`.
+- s23 (IVF-PQ + exact rerank) composes the build / probe / score
+  stages with the shared exact-L2 and recall@k tails.
+- s19/s20 (flat PQ, no coarse quantizer) reuse the stride-sampled
+  codebook, the code assignment and the ADC table builder.
+
+The stages stay separate so an index can be built once, persisted and
+queried many times (the FAISS deployment lifecycle);
+tools/scale_probe_ann.py drives them at 2M vectors / 64 cells to
+measure that query cost scales with PROBED CELLS, not corpus size.
+
+Residual vs raw PQ is a property of the codebooks: with
+`residual=True` the PQ codes quantize v - centroid(cell) instead of
+v, so `ivf_pq_encode` encodes residuals and `ivf_pq_probe` builds one
+ADC table per (query, probed cell) from the query's residual w.r.t.
+that cell. `ivf_pq_topk` is the same for both.
+
+Determinism contract: codebooks are taken from the data itself (first
+n_cells vectors = coarse centroids, s05 convention; every stride-th
+vector = PQ codebook rows), and every distance is rounded to 6 dp
+before any argmin/sum boundary, so any engine — DuckDB included —
+replays cells, codes and rank order bit-identically.
 
 Scale notes:
 - ENCODE is one map-only mapInPandas pass over the corpus; the
@@ -29,6 +40,9 @@ Scale notes:
 - ADC scoring is a row-local F.aggregate over the codes array
   indexing the flattened M × K distance table — pure JVM expression,
   no UDF in the scoring hot path.
+- Driver-side collects are the coarse centroids, the codebook rows
+  and the query sample: n_cells + k_codes + n_queries rows, whatever
+  the corpus size.
 """
 
 from __future__ import annotations
@@ -38,6 +52,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from serverless_datalake_aws_spark.functions import vector as VX
 
 try:  # UDF closures must survive worker-side import (cwd ≠ repo root)
     from pyspark import cloudpickle
@@ -59,11 +75,83 @@ def np_round6(a):
     return np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
 
 
+def vectors(rows):
+    """(id, embedding) rows → (n, D) float64 matrix."""
+    import numpy as np
+
+    return np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+
+
+def _cell_d2(V, CC):
+    """Rounded squared L2 from each row of V to each coarse centroid."""
+    return np_round6(((V[:, None, :] - CC[None, :, :]) ** 2).sum(2))
+
+
+def pq_codes(X, Cm):
+    """(n, D) vectors → (n, m) int32 codes: per subspace, the nearest
+    codebook row by rounded squared L2 (ties → smallest code)."""
+    import numpy as np
+
+    _, m, sub = Cm.shape
+    Xm = X.reshape(len(X), m, sub)
+    d2 = np_round6(
+        ((Xm[:, :, None, :] - Cm.transpose(1, 0, 2)[None, :, :, :]) ** 2).sum(
+            axis=3
+        )
+    )
+    return d2.argmin(axis=2).astype(np.int32)
+
+
+def adc_tables(Q, Cm):
+    """(n, D) query vectors → (n, K, M) rounded ADC distance tables:
+    squared L2 from each query subvector to each codebook row."""
+    _, m, sub = Cm.shape
+    Qm = Q.reshape(len(Q), m, sub)
+    return np_round6(((Qm[:, None, :, :] - Cm[None, :, :, :]) ** 2).sum(axis=3))
+
+
+def _collect_vectors(df: DataFrame, id_col: str, emb_col: str) -> list:
+    return sorted((r[id_col], r[emb_col]) for r in df.select(id_col, emb_col).collect())
+
+
+def query_sample(
+    emb: DataFrame, n: int, id_col: str = "vec_id", emb_col: str = "embedding"
+) -> list[tuple[int, list]]:
+    """The first n corpus vectors (id < n), sorted by id — the query
+    set of every s-family audit and the coarse centroids of IVF.
+    Bounded collect: n rows."""
+    return _collect_vectors(emb.filter(F.col(id_col) < n), id_col, emb_col)
+
+
+def stride_sample(
+    emb: DataFrame,
+    k_codes: int,
+    stride: int,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+):
+    """PQ codebook seed vectors: the first k_codes ids with
+    id % stride == 0, as a (k_eff, D) matrix. Small corpora may yield
+    k_eff < k_codes, as the oracles' LIMIT does. Collects k_eff rows:
+    a top-k at the root of a collect merges on the driver, shipping k
+    rows from EVERY partition; under coalesce(1) it merges in one
+    executor task instead, in the same single job and corpus scan."""
+    top = (
+        emb.filter(F.col(id_col) % stride == 0)
+        .select(id_col, emb_col)
+        .orderBy(id_col)
+        .limit(k_codes)
+        .coalesce(1)
+    )
+    return vectors(_collect_vectors(top, id_col, emb_col))
+
+
 @dataclass
 class PQCodebooks:
     """Driver-held quantizers: coarse centroids + per-subspace PQ
     codebook. Size: n_cells·D + k·D doubles — closure/broadcast-sized
-    at any corpus scale (the index's learned state, not its data)."""
+    at any corpus scale (the index's learned state, not its data).
+    `residual`: the codes quantize v - centroid(cell), not v."""
 
     ccids: "object"  # np.ndarray[int64] (n_cells,)
     CC: "object"  # np.ndarray (n_cells, D)
@@ -71,6 +159,7 @@ class PQCodebooks:
     m: int
     sub: int
     k: int
+    residual: bool = False
 
 
 def pq_codebooks(
@@ -82,32 +171,26 @@ def pq_codebooks(
     sub: int,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
+    residual: bool = False,
 ) -> PQCodebooks:
-    """Data-derived quantizers (bounded collects: n_cells + k rows).
-    Production swap-in: k-means centroids — same shapes."""
+    """Data-derived quantizers (bounded collects: n_cells + k rows,
+    whatever the corpus size or partition count).
+    With `residual`, each codebook seed is replaced by its residual
+    w.r.t. its OWN cell. Production swap-in: k-means centroids (per
+    cell for residual) — same shapes."""
     import numpy as np
 
-    coarse_rows = sorted(
-        (r[id_col], r[emb_col])
-        for r in emb.filter(F.col(id_col) < n_cells)
-        .select(id_col, emb_col)
-        .collect()
-    )
-    pq_rows = sorted(
-        (r[id_col], r[emb_col])
-        for r in emb.filter(F.col(id_col) % stride == 0)
-        .select(id_col, emb_col)
-        .orderBy(id_col)
-        .limit(k_codes)
-        .collect()
-    )
+    coarse_rows = query_sample(emb, n_cells, id_col, emb_col)
     ccids = np.array([c[0] for c in coarse_rows], dtype=np.int64)
-    CC = np.stack([np.asarray(c[1], dtype=np.float64) for c in coarse_rows])
-    k_eff = len(pq_rows)
-    Cm = np.stack(
-        [np.asarray(c[1], dtype=np.float64) for c in pq_rows]
-    ).reshape(k_eff, m, sub)
-    return PQCodebooks(ccids=ccids, CC=CC, Cm=Cm, m=m, sub=sub, k=k_eff)
+    CC = vectors(coarse_rows)
+    PQV = stride_sample(emb, k_codes, stride, id_col, emb_col)
+    if residual:
+        PQV = PQV - CC[_cell_d2(PQV, CC).argmin(axis=1)]
+    k_eff = len(PQV)
+    Cm = PQV.reshape(k_eff, m, sub)
+    return PQCodebooks(
+        ccids=ccids, CC=CC, Cm=Cm, m=m, sub=sub, k=k_eff, residual=residual
+    )
 
 
 def ivf_pq_encode(
@@ -122,28 +205,19 @@ def ivf_pq_encode(
 
     # unpack ALL fields into locals — referencing cb inside the closure
     # would pickle the whole dataclass (CC/Cm twice) into every task
-    ccids, CC, Cm, m, sub = cb.ccids, cb.CC, cb.Cm, cb.m, cb.sub
+    ccids, CC, Cm, residual = cb.ccids, cb.CC, cb.Cm, cb.residual
 
     def _encode(it):
         for pdf in it:
             if not len(pdf):
                 continue
             V = np.stack(pdf[emb_col].values).astype(np.float64)
-            cd2 = np_round6(((V[:, None, :] - CC[None, :, :]) ** 2).sum(2))
-            cid = ccids[np.argmin(cd2, axis=1)]  # ties → smallest ccid
-            Vm = V.reshape(len(pdf), m, sub)
-            d2 = np_round6(
-                (
-                    (Vm[:, :, None, :] - Cm.transpose(1, 0, 2)[None, :, :, :])
-                    ** 2
-                ).sum(axis=3)
-            )
-            codes = d2.argmin(axis=2).astype(np.int32)  # ties → smallest k
+            ai = _cell_d2(V, CC).argmin(axis=1)  # ties → smallest ccid
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].values,
-                    "cid": cid,
-                    "codes": list(codes),
+                    "cid": ccids[ai],
+                    "codes": list(pq_codes(V - CC[ai] if residual else V, Cm)),
                 }
             )
 
@@ -158,25 +232,25 @@ def ivf_pq_probe(
     cb: PQCodebooks,
     nprobe: int,
 ) -> DataFrame:
-    """Per query: its nprobe nearest cells + flattened M × K ADC
-    distance table (NQ × nprobe rows — broadcast-sized)."""
+    """Per query: its nprobe nearest cells, each with a flattened
+    M × K ADC distance table (flat[m * K + code]) — NQ × nprobe rows,
+    broadcast-sized. Raw codebooks give every probed cell the same
+    table; residual ones a table over q - centroid(cell)."""
     import numpy as np
 
-    ccids, CC, Cm = cb.ccids, cb.CC, cb.Cm
-    Q = np.stack([np.asarray(q[1], dtype=np.float64) for q in queries])
-    qd2c = np_round6(((Q[:, None, :] - CC[None, :, :]) ** 2).sum(2))
-    Qm = Q.reshape(len(queries), cb.m, cb.sub)
-    dtab = np_round6(
-        ((Qm[:, None, :, :] - Cm[None, :, :, :]) ** 2).sum(axis=3)
-    )  # (NQ, K, M)
-    probe_rows = []
+    ccids, CC = cb.ccids, cb.CC
+    Q = vectors(queries)
+    qd2c = _cell_d2(Q, CC)
+    keys, qvecs = [], []
     for qi, (qid, _) in enumerate(queries):
         order = sorted(range(len(ccids)), key=lambda j: (qd2c[qi, j], ccids[j]))
-        flat = dtab[qi].T.ravel().tolist()  # flat[m * k + code]
         for j in order[:nprobe]:
-            probe_rows.append((int(qid), int(ccids[j]), flat))
+            keys.append((int(qid), int(ccids[j])))
+            qvecs.append(Q[qi] - CC[j] if cb.residual else Q[qi])
+    dtab = adc_tables(np.stack(qvecs), cb.Cm)  # (NQ·nprobe, K, M)
     return spark.createDataFrame(
-        probe_rows, "query_id long, cid long, dtab array<double>"
+        [(qid, cid, t.T.ravel().tolist()) for (qid, cid), t in zip(keys, dtab)],
+        "query_id long, cid long, dtab array<double>",
     )
 
 
@@ -215,6 +289,47 @@ def ivf_pq_topk(
     )
 
 
+def exact_l2(emb: DataFrame, qrows: list[tuple[int, list]]) -> DataFrame:
+    """Ground truth: exact squared L2 (query_id, neighbor_id, d2) from
+    every query to every corpus vector — the brute-force BLAS pass,
+    O(N·Q) — self-pairs dropped, d2 rounded to 6 dp."""
+    return (
+        VX.brute_scores(emb, qrows, metric="l2")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", F.round("d2", 6).alias("d2"))
+    )
+
+
+def exact_topk(scored: DataFrame, topk: int) -> DataFrame:
+    """Rows of `scored` ranked per query by (d2, neighbor_id) into
+    `erk`, keeping erk <= topk — the exact top-k of an exact_l2 frame,
+    or the reranked page of a shortlist joined to one."""
+    w = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
+    return scored.withColumn("erk", F.row_number().over(w)).filter(
+        F.col("erk") <= topk
+    )
+
+
+def recall_at_k(
+    top: DataFrame, exact: DataFrame, topk: int, col: str = "recall_at_k"
+) -> DataFrame:
+    """Per query, |top ∩ exact top-k| / topk rounded to 2 dp, as
+    column `col` — the audit an approximate index ships with."""
+    truth = exact_topk(exact, topk).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
+    )
+    return (
+        top.select("query_id", "neighbor_id")
+        .join(truth, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.round(F.count("hit").cast("double") / F.lit(float(topk)), 2).alias(
+                col
+            )
+        )
+    )
+
+
 def ivf_pq_search(
     spark: SparkSession,
     emb: DataFrame,
@@ -227,45 +342,17 @@ def ivf_pq_search(
     sub: int,
     k_codes: int,
     stride: int,
+    residual: bool = False,
 ) -> DataFrame:
-    """End-to-end IVF-PQ with per-query recall@k audit — the s21
-    composition: build → probe → score → brute-force recall join.
-    Queries are the first n_queries corpus vectors (self-query rows
-    excluded), matching the s01/s05/s19 convention."""
-    from serverless_datalake_aws_spark.functions import vector as VX
-
-    cb = pq_codebooks(emb, n_cells, k_codes, stride, m, sub)
-    qrows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    enc = ivf_pq_encode(emb, cb)
+    """End-to-end IVF-PQ with per-query recall@k audit — build → probe
+    → score → brute-force recall join. Queries are the first n_queries
+    corpus vectors (self-query rows excluded), matching the
+    s01/s05/s19 convention."""
+    cb = pq_codebooks(emb, n_cells, k_codes, stride, m, sub, residual=residual)
+    qrows = query_sample(emb, n_queries)
     probe = ivf_pq_probe(spark, qrows, cb, nprobe)
-    topk_df = ivf_pq_topk(enc, probe, cb, topk)
-
-    exact = (
-        VX.brute_scores(emb, qrows, metric="l2")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round("d2", 6).alias("d2"))
-    )
-    we = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact_top = (
-        exact.withColumn("erk", F.row_number().over(we))
-        .filter(F.col("erk") <= topk)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    recall = (
-        topk_df.select("query_id", "neighbor_id")
-        .join(exact_top, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.count("hit").cast("double") / F.lit(float(topk)), 2
-            ).alias("recall_at_k")
-        )
-    )
+    topk_df = ivf_pq_topk(ivf_pq_encode(emb, cb), probe, cb, topk)
+    recall = recall_at_k(topk_df, exact_l2(emb, qrows), topk)
     return (
         topk_df.join(recall, "query_id")
         .select("query_id", "neighbor_id", "approx_d2", "rk", "recall_at_k")

@@ -131,6 +131,25 @@ def _epoch_dirs(path: str, sub: str) -> int:
         return 0
 
 
+def _compact_on_cadence(index) -> None:
+    """Opportunistic cadence call at the END of an index's absorb
+    (after the commit, so the fold always includes the epoch just
+    written): fold everything once the busiest of `index.SUBTABLES`
+    reaches `index.compact_every` epoch dirs. Every subtable counts —
+    the flat ones (pairs, bands) gain a dir per batch even when the
+    batch is empty, while a partitioned one skips empty writes. A
+    concurrent-reader abort (RuntimeError) just defers to the next
+    batch — maintenance must never fail an ingest."""
+    if not index.compact_every:
+        return
+    path = index.state.path
+    if max(_epoch_dirs(path, s) for s, _ in index.SUBTABLES) >= index.compact_every:
+        try:
+            index.compact()
+        except RuntimeError:
+            pass
+
+
 def sketch_batch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(bands, toks) for one micro-batch — d04's exact sketch pipeline
     (3-gram shingles, md5 minhash, LSH band keys) over `batch`
@@ -167,6 +186,9 @@ class MinHashIngestIndex:
     # case); a dup-dense batch touching every bucket degrades
     # gracefully to the pre-prune full index scan, never worse.
     MAX_INLIST = 10_000
+    # (subtable, write-time partition columns): compact() folds each,
+    # and the absorb cadence counts epoch dirs across all of them
+    SUBTABLES = (("pairs", None), ("bands", None), ("toks", ["tb"]))
 
     def __init__(
         self,
@@ -207,24 +229,8 @@ class MinHashIngestIndex:
         `compact_every` epoch dirs, or between absorbs by an external
         maintenance job; the shingle table keeps its doc_id bucketing
         so the candidate fetch still dir-prunes after the fold."""
-        self.state.compact("pairs")
-        self.state.compact("bands")
-        self.state.compact("toks", partition_by=["tb"])
-
-    def _maybe_compact(self) -> None:
-        """Opportunistic cadence call at the END of absorb (after the
-        commit, so the fold always includes the epoch just written).
-        Folds everything when the busiest subtable's epoch-dir count
-        crosses the threshold; a concurrent-reader abort
-        (RuntimeError) just defers to the next batch — maintenance
-        must never fail an ingest."""
-        if not self.compact_every:
-            return
-        if _epoch_dirs(self.state.path, "toks") >= self.compact_every:
-            try:
-                self.compact()
-            except RuntimeError:
-                pass
+        for sub, part in self.SUBTABLES:
+            self.state.compact(sub, partition_by=part)
 
     def _history_toks(
         self, high: int, cand: DataFrame, batch_toks: DataFrame
@@ -359,7 +365,7 @@ class MinHashIngestIndex:
             cand.unpersist()
             if old_toks is not None and self.prune_history:
                 old_toks.unpersist()
-        self._maybe_compact()
+        _compact_on_cadence(self)
 
 
 class CosineIngestIndex:
@@ -379,6 +385,9 @@ class CosineIngestIndex:
     Without it every batch re-reads the whole accumulated vector
     table (corpus-scale I/O) just to throw most of it away in the
     join."""
+
+    # as MinHashIngestIndex.SUBTABLES
+    SUBTABLES = (("pairs", None), ("vecs", ["cid"]))
 
     def __init__(
         self,
@@ -423,17 +432,8 @@ class CosineIngestIndex:
         table keeps its cid partitioning so cluster pruning survives
         the fold. Called from absorb() on the dir-count cadence, or
         between absorbs by an external job (single-writer contract)."""
-        self.state.compact("pairs")
-        self.state.compact("vecs", partition_by=["cid"])
-
-    def _maybe_compact(self) -> None:
-        if not self.compact_every:
-            return
-        if _epoch_dirs(self.state.path, "vecs") >= self.compact_every:
-            try:
-                self.compact()
-            except RuntimeError:
-                pass
+        for sub, part in self.SUBTABLES:
+            self.state.compact(sub, partition_by=part)
 
     def _eps_pairs(self, left: DataFrame, right: DataFrame) -> DataFrame:
         """ε-similar (vec1 < vec2) pairs across two assigned sides,
@@ -513,4 +513,4 @@ class CosineIngestIndex:
             self.state.commit(epoch_id)
         finally:
             assigned.unpersist()
-        self._maybe_compact()
+        _compact_on_cadence(self)

@@ -22,7 +22,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from serverless_datalake_aws_spark.catalog import table
-from serverless_datalake_aws_spark.operators.ann import np_round6
+from serverless_datalake_aws_spark.operators.ann import (
+    adc_tables,
+    exact_l2,
+    exact_topk,
+    ivf_pq_encode,
+    ivf_pq_probe,
+    ivf_pq_search,
+    ivf_pq_topk,
+    np_round6,
+    pq_codebooks,
+    pq_codes,
+    query_sample,
+    recall_at_k,
+    stride_sample,
+    vectors,
+)
 from serverless_datalake_aws_spark.plans import query
 
 try:  # UDF closures must survive worker-side import (cwd ≠ repo root)
@@ -90,67 +105,32 @@ _PQ_ORACLE = f"""
 """
 
 
-def _pq_scored(
-    spark: SparkSession, sf_dir: str, qrows: list | None = None
-) -> DataFrame:
+def _pq_scored(emb: DataFrame, qrows: list) -> DataFrame:
     """ADC-scored (query_id, neighbor_id, approx_d2) triples for the
     whole corpus, self-pairs excluded — the shared PQ scan behind s19
-    (top-k) and s20 (recall audit + rerank). Callers that already
-    collected the query sample pass it via `qrows` so the corpus isn't
-    re-scanned for it."""
+    (top-k) and s20 (recall audit + rerank): the stride-sampled
+    codebook and query ADC tables of operators/ann.py, with encode and
+    ADC fused into one joinless map pass (codes never leave the
+    batch)."""
     import numpy as np
     import pandas as pd
 
-    emb = table(spark, sf_dir, "embeddings")
-    cents = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") % _PQ_STRIDE == 0)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    if qrows is None:
-        qrows = sorted(
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < _PQ_NQ)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-    C = np.stack([np.asarray(c[1], dtype=np.float64) for c in cents])
-    Q = np.stack([np.asarray(q[1], dtype=np.float64) for q in qrows])
+    Cm = stride_sample(emb, _PQ_K, _PQ_STRIDE).reshape(-1, _PQ_M, _PQ_SUB)
     qids = np.array([q[0] for q in qrows], dtype=np.int64)
-    M, S = _PQ_M, _PQ_SUB
-    Cm = C.reshape(len(cents), M, S)  # (K_eff, M, S); small SFs
-    # may yield fewer than _PQ_K stride hits — SQL's LIMIT caps the same way
-    # query ADC tables, rounded like the encode distances: (Q, M, K)
-    Qm = Q.reshape(len(qids), M, S)
-    dtab = np_round6(
-        ((Qm[:, None, :, :] - Cm[None, :, :, :]) ** 2).sum(axis=3)
-    ).transpose(0, 2, 1)
+    dtab = adc_tables(vectors(qrows), Cm).transpose(0, 2, 1)  # (Q, M, K)
 
     def _encode_adc(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].values).astype(np.float64)
-            Vm = V.reshape(len(pdf), M, S)
-            # (n, M, K) squared distances, rounded before argmin so
-            # ties resolve to the smallest code in both engines
-            d2 = np_round6(
-                ((Vm[:, :, None, :] - Cm.transpose(1, 0, 2)[None, :, :, :]) ** 2).sum(
-                    axis=3
-                )
-            )
-            codes = d2.argmin(axis=2)  # (n, M); first occurrence = smallest k
+            codes = pq_codes(np.stack(pdf["embedding"].values).astype(np.float64), Cm)
             acc = np.zeros((len(pdf), len(qids)), dtype=np.float64)
-            for m in range(M):
+            for m in range(_PQ_M):
                 acc += dtab[:, m, :][:, codes[:, m]].T  # (n, Q)
-            n = len(pdf)
             yield pd.DataFrame(
                 {
                     "neighbor_id": np.repeat(pdf["vec_id"].values, len(qids)),
-                    "query_id": np.tile(qids, n),
+                    "query_id": np.tile(qids, len(pdf)),
                     "approx_d2": np_round6(acc).ravel(),
                 }
             )
@@ -181,9 +161,10 @@ def s19_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     and after the sum (ADC) so the DuckDB oracle reproduces codes,
     distances, and rank order exactly; ranking ties break on
     neighbor_id in both engines."""
+    emb = table(spark, sf_dir, "embeddings")
     w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
     return (
-        _pq_scored(spark, sf_dir)
+        _pq_scored(emb, query_sample(emb, _PQ_NQ))
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= _PQ_TOPK)
         .select("query_id", "neighbor_id", "approx_d2", "rk")
@@ -287,62 +268,31 @@ def s20_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact leg is the brute-force BLAS pass (brute_scores
     metric='l2') — O(N·Q), rides the fixed query sample; both legs
     shuffle only (query, neighbor, dist) triples."""
-    from serverless_datalake_aws_spark.functions import vector as VX
-
     emb = table(spark, sf_dir, "embeddings")
-    qrows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < _PQ_NQ)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    exact = (
-        VX.brute_scores(emb, qrows, metric="l2")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round("d2", 6).alias("d2"))
-    ).cache()
-    # cache+count: exact feeds TWO consumers (exact-top window + the
+    qrows = query_sample(emb, _PQ_NQ)
+    # cache+count: exact feeds THREE consumers (two recall truths + the
     # rerank join) and pq_rk feeds two more — unmaterialized, the
-    # O(N*Q) BLAS pass would execute twice (the d05 trap)
+    # O(N*Q) BLAS pass would execute repeatedly (the d05 trap)
+    exact = exact_l2(emb, qrows).cache()
     exact.count()
-    we = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact_top = (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
     wpq = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    pq_rk = _pq_scored(spark, sf_dir, qrows=qrows).withColumn(
+    pq_rk = _pq_scored(emb, qrows).withColumn(
         "rk", F.row_number().over(wpq)
     ).cache()
     pq_rk.count()
-    pq_top = pq_rk.filter(F.col("rk") <= _PQ_TOPK).select(
-        "query_id", "neighbor_id"
-    )
-    wrr = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    rerank_top = (
+    pq_top = pq_rk.filter(F.col("rk") <= _PQ_TOPK)
+    rerank_top = exact_topk(
         pq_rk.filter(F.col("rk") <= _S20_SHORT)
         .select("query_id", "neighbor_id")
-        .join(exact, ["query_id", "neighbor_id"])
-        .withColumn("rrk", F.row_number().over(wrr))
-        .filter(F.col("rrk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id")
+        .join(exact, ["query_id", "neighbor_id"]),
+        _PQ_TOPK,
     )
-
-    def _recall(top: DataFrame, col: str) -> DataFrame:
-        return (
-            top.join(exact_top, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.round(
-                    F.count("hit").cast("double") / F.lit(float(_PQ_TOPK)), 2
-                ).alias(col)
-            )
-        )
-
     out = (
-        _recall(pq_top, "recall_pq")
-        .join(_recall(rerank_top, "recall_rerank"), "query_id")
+        recall_at_k(pq_top, exact, _PQ_TOPK, "recall_pq")
+        .join(
+            recall_at_k(rerank_top, exact, _PQ_TOPK, "recall_rerank"),
+            "query_id",
+        )
         .orderBy("query_id")
     )
     rows = out.collect()  # per-query rows: tiny
@@ -353,6 +303,16 @@ def s20_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVFPQ_C = 8  # coarse cells (first C vectors = centroids, s05 convention)
 _IVFPQ_NPROBE = 2  # cells searched per query
+_IVFPQ_ARGS = dict(
+    n_cells=_IVFPQ_C,
+    nprobe=_IVFPQ_NPROBE,
+    n_queries=_PQ_NQ,
+    topk=_PQ_TOPK,
+    m=_PQ_M,
+    sub=_PQ_SUB,
+    k_codes=_PQ_K,
+    stride=_PQ_STRIDE,
+)
 
 _S21_ORACLE = f"""
     WITH sub AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m),
@@ -474,20 +434,8 @@ def s21_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     All distances round to 6 dp before every argmin/sum boundary so
     DuckDB replays cells, codes, probes, distances, and rank order
     bit-identically (cf. similarity5 module docstring)."""
-    from serverless_datalake_aws_spark.operators.ann import ivf_pq_search
-
-    emb = table(spark, sf_dir, "embeddings")
     return ivf_pq_search(
-        spark,
-        emb,
-        n_cells=_IVFPQ_C,
-        nprobe=_IVFPQ_NPROBE,
-        n_queries=_PQ_NQ,
-        topk=_PQ_TOPK,
-        m=_PQ_M,
-        sub=_PQ_SUB,
-        k_codes=_PQ_K,
-        stride=_PQ_STRIDE,
+        spark, table(spark, sf_dir, "embeddings"), **_IVFPQ_ARGS
     )
 
 
@@ -605,7 +553,8 @@ def s22_ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(query, cell) table is the structural difference from s21,
     where one table served every probe.
 
-    Plan shape is s21's (and shares its gates' properties): one
+    The code path is s21's — `ivf_pq_search` over residual codebooks
+    (`pq_codebooks(residual=True)`) — so the plan shape is too: one
     map-only encode pass (assign + residual + codes; vectors die in
     the batch), a BroadcastHashJoin on cell id against the
     (query_id, cid, dtab) probe table — now one row per probed cell
@@ -620,141 +569,8 @@ def s22_ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means, same shapes. Rounding discipline identical to s19/s21, so
     DuckDB replays cells, residuals, codes, probes, and ranks
     bit-identically."""
-    import numpy as np
-    import pandas as pd
-
-    from serverless_datalake_aws_spark.functions import vector as VX
-
-    emb = table(spark, sf_dir, "embeddings")
-    coarse_rows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < _IVFPQ_C)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    pq_rows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") % _PQ_STRIDE == 0)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    qrows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < _PQ_NQ)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    ccids = np.array([c[0] for c in coarse_rows], dtype=np.int64)
-    CC = np.stack([np.asarray(c[1], dtype=np.float64) for c in coarse_rows])
-    K_eff, M, S = len(pq_rows), _PQ_M, _PQ_SUB
-
-    def _assign(V):  # rounded-d2 argmin over coarse cells (ties→smallest)
-        cd2 = np_round6(((V[:, None, :] - CC[None, :, :]) ** 2).sum(2))
-        return np.argmin(cd2, axis=1)
-
-    # residual codebook: each stride-sampled vector's residual w.r.t.
-    # its OWN cell (deterministic; production = per-cell k-means)
-    PQV = np.stack([np.asarray(c[1], dtype=np.float64) for c in pq_rows])
-    CmR = (PQV - CC[_assign(PQV)]).reshape(K_eff, M, S)
-
-    def _encode(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].values).astype(np.float64)
-            ai = _assign(V)
-            R = (V - CC[ai]).reshape(len(pdf), M, S)
-            d2 = np_round6(
-                (
-                    (R[:, :, None, :] - CmR.transpose(1, 0, 2)[None, :, :, :])
-                    ** 2
-                ).sum(axis=3)
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "cid": ccids[ai],
-                    "codes": list(d2.argmin(axis=2).astype(np.int32)),
-                }
-            )
-
-    enc = emb.select("vec_id", "embedding").mapInPandas(
-        _encode, schema="vec_id long, cid long, codes array<int>"
-    )
-
-    # per-(query, probed cell) ADC tables over the QUERY's residual
-    # w.r.t. that cell
-    Q = np.stack([np.asarray(q[1], dtype=np.float64) for q in qrows])
-    qd2c = np_round6(((Q[:, None, :] - CC[None, :, :]) ** 2).sum(2))
-    probe_rows = []
-    for qi, (qid, _) in enumerate(qrows):
-        order = sorted(range(len(ccids)), key=lambda j: (qd2c[qi, j], ccids[j]))
-        for j in order[:_IVFPQ_NPROBE]:
-            qr = (Q[qi] - CC[j]).reshape(M, S)
-            dtab = np_round6(
-                ((qr[None, :, :] - CmR) ** 2).sum(axis=2)
-            )  # (K, M)
-            probe_rows.append(
-                (int(qid), int(ccids[j]), dtab.T.ravel().tolist())
-            )
-    probe = spark.createDataFrame(
-        probe_rows, "query_id long, cid long, dtab array<double>"
-    )
-
-    adc = F.round(
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(M - 1)),
-            F.lit(0.0),
-            lambda acc, m: acc
-            + F.element_at(
-                F.col("dtab"),
-                (m * K_eff + F.element_at(F.col("codes"), m + 1) + 1).cast(
-                    "int"
-                ),
-            ),
-        ),
-        6,
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    topk = (
-        enc.join(F.broadcast(probe), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("approx_d2"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= _PQ_TOPK)
-    )
-
-    exact = (
-        VX.brute_scores(emb, qrows, metric="l2")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round("d2", 6).alias("d2"))
-    )
-    we = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact_top = (
-        exact.withColumn("erk", F.row_number().over(we))
-        .filter(F.col("erk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    recall = (
-        topk.select("query_id", "neighbor_id")
-        .join(exact_top, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.count("hit").cast("double") / F.lit(float(_PQ_TOPK)), 2
-            ).alias("recall_at_k")
-        )
-    )
-    return (
-        topk.join(recall, "query_id")
-        .select("query_id", "neighbor_id", "approx_d2", "rk", "recall_at_k")
-        .orderBy("query_id", "rk")
+    return ivf_pq_search(
+        spark, table(spark, sf_dir, "embeddings"), residual=True, **_IVFPQ_ARGS
     )
 
 
@@ -817,60 +633,29 @@ def s23_serving_plan(spark: SparkSession, sf_dir: str):
     and unpersists the cached exact leg, which leaves only a
     Scan ExistingRDD behind — invisible to a plan audit. The caller
     owns `exact_cached` and must unpersist it after materializing."""
-    from serverless_datalake_aws_spark.functions import vector as VX
-    from serverless_datalake_aws_spark.operators.ann import (
-        ivf_pq_encode,
-        ivf_pq_probe,
-        ivf_pq_topk,
-        pq_codebooks,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
-    cb = pq_codebooks(
-        emb, _IVFPQ_C, k_codes=_PQ_K, stride=_PQ_STRIDE, m=_PQ_M, sub=_PQ_SUB
-    )
-    qrows = sorted(
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < _PQ_NQ)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    enc = ivf_pq_encode(emb, cb)
+    cb = pq_codebooks(emb, _IVFPQ_C, _PQ_K, _PQ_STRIDE, _PQ_M, _PQ_SUB)
+    qrows = query_sample(emb, _PQ_NQ)
     probe = ivf_pq_probe(spark, qrows, cb, _IVFPQ_NPROBE)
-    shortlist = ivf_pq_topk(enc, probe, cb, _S23_R).select(
-        "query_id", "neighbor_id"
-    )
-    exact = (
-        VX.brute_scores(emb, qrows, metric="l2")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round("d2", 6).alias("exact_d2"))
-    ).cache()  # feeds the rerank join AND the exact-top window
+    shortlist = ivf_pq_topk(ivf_pq_encode(emb, cb), probe, cb, _S23_R)
+    # cached: feeds the rerank join AND the recall truth
+    exact = exact_l2(emb, qrows).cache()
     exact.count()
-    rerank = shortlist.join(exact, ["query_id", "neighbor_id"])
-    wr = W.partitionBy("query_id").orderBy("exact_d2", "neighbor_id")
-    topr = (
-        rerank.withColumn("rk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rk") <= _PQ_TOPK)
-    )
-    we = W.partitionBy("query_id").orderBy("exact_d2", "neighbor_id")
-    exact_top = (
-        exact.withColumn("erk", F.row_number().over(we))
-        .filter(F.col("erk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    recall = (
-        topr.select("query_id", "neighbor_id")
-        .join(exact_top, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.count("hit").cast("double") / F.lit(float(_PQ_TOPK)), 2
-            ).alias("recall_at_k")
-        )
+    topr = exact_topk(
+        shortlist.select("query_id", "neighbor_id").join(
+            exact, ["query_id", "neighbor_id"]
+        ),
+        _PQ_TOPK,
     )
     out = (
-        topr.join(recall, "query_id")
-        .select("query_id", "neighbor_id", "exact_d2", "rk", "recall_at_k")
+        topr.join(recall_at_k(topr, exact, _PQ_TOPK), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("d2").alias("exact_d2"),
+            F.col("erk").cast("long").alias("rk"),
+            "recall_at_k",
+        )
         .orderBy("query_id", "rk")
     )
     return out, exact

@@ -1136,7 +1136,10 @@ def _top_user_fn(key, pdfs, state):
     # half-away round differs from the exact-decimal one by at most
     # one 1e-4 quantum, so every possible exact-argmax user sits
     # within 2e-4 of the vectorized max: shortlist there (normally a
-    # handful of rows), then decide exactly with _round4.
+    # handful of rows), then decide exactly with _round4. The window
+    # was checked exhaustively for |t|·1e4 in 2**52..2**53, and above
+    # that distinct totals lie > 1e-4 apart, so tied totals are equal
+    # floats with equal r4v.
     r4v = np.floor(np.abs(t) * 1e4 + 0.5) / 1e4 * np.sign(t)
     cand = np.nonzero(r4v >= r4v.max() - 2e-4)[0]
     neg_r4, top_uid = min(

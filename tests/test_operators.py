@@ -759,3 +759,72 @@ def test_datagen_partitioning_is_environment_independent(spark):
     from serverless_datalake_aws_spark.operators.datagen import _ranged
 
     assert _ranged(spark, 5_000_000).rdd.getNumPartitions() == 5
+
+
+def test_ivf_pq_search_driver_payload_is_corpus_independent(spark, monkeypatch):
+    """The bound pq_codebooks states: the driver-side collects that
+    ivf_pq_search makes return, in total, at most n_cells + k_codes +
+    n_queries rows — and the same count at two corpus sizes. Each
+    collect counts the rows it returns plus the rows of any broadcast
+    built inside its plan. A root that merges per-partition results on
+    the driver (TakeOrderedAndProject, CollectLimit, CollectTail) ships
+    more rows than it returns, so none may appear: both corpora span 4
+    partitions, and a top-k collect would ship k rows from each."""
+    from serverless_datalake_aws_spark.operators.ann import ivf_pq_search
+    from serverless_datalake_aws_spark.operators.metrics import (
+        _metric_values,
+        _walk_final_plan,
+    )
+
+    params = dict(
+        n_cells=4, nprobe=2, n_queries=3, topk=3, m=4, sub=4, k_codes=8, stride=7
+    )
+    wrappers = ("AdaptiveSparkPlanExec", "ResultQueryStageExec")
+    merging = ("TakeOrderedAndProjectExec", "CollectLimitExec", "CollectTailExec")
+    collects = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def recording_collect(self):
+        rows = collect(self)
+        nodes = [
+            n
+            for n in _walk_final_plan(self._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() not in wrappers
+        ]
+        broadcast_rows = sum(
+            int(v)
+            for n in nodes
+            if n.getClass().getSimpleName() == "BroadcastExchangeExec"
+            for name, v in _metric_values(n)
+            if "number of output rows" in name
+        )
+        collects.append(
+            (nodes[0].getClass().getSimpleName(), len(rows) + broadcast_rows)
+        )
+        return rows
+
+    def corpus(n):
+        dims = F.sequence(F.lit(0), F.lit(15))
+        return spark.range(0, n, 1, 4).select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                dims,
+                lambda d: (
+                    F.pmod(F.xxhash64(F.col("id"), d), F.lit(1000)) / 1000.0
+                ).cast("float"),
+            ).alias("embedding"),
+        )
+
+    totals = []
+    for n in (300, 1200):
+        collects.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(frame, "collect", recording_collect)
+            out = ivf_pq_search(spark, corpus(n), **params)
+        assert len(collects) == 3, collects
+        assert not [c for c in collects if c[0] in merging], collects
+        totals.append(sum(rows for _, rows in collects))
+        assert out.count() == params["n_queries"] * params["topk"]
+    bound = params["n_cells"] + params["k_codes"] + params["n_queries"]
+    assert totals[0] == totals[1] <= bound, (totals, bound)

@@ -411,44 +411,46 @@ def test_first_epoch_and_no_candidates_paths(spark, tmp_path):
 
 
 def test_compact_cadence_bounds_dirs_and_keeps_results(spark, tmp_path):
-    """absorb()'s dir-count cadence (r12): with compact_every=3 the
-    epoch-dir count stays bounded across many absorbs, and the pair
-    set is bit-identical to a never-compacted index."""
+    """absorb()'s dir-count cadence: with compact_every=3 the
+    epoch-dir count of EVERY subtable stays bounded across many
+    absorbs, and the pair set is bit-identical to a never-compacted
+    index. Two streams: one doc per epoch, and mostly-empty batches —
+    which add a dir per batch to the flat pairs/bands subtables but
+    none to the partitioned shingle table."""
     import os
 
-    base = str(tmp_path / "c")
-    ref = str(tmp_path / "r")
+    def dirs(path):
+        # epoch dirs per subtable; a missing subtable raises
+        return [
+            sum(
+                1
+                for d in os.listdir(os.path.join(path, sub))
+                if d.startswith("epoch=")
+            )
+            for sub in ("pairs", "bands", "toks")
+        ]
+
+    def absorb_all(path, batches, compact_every):
+        idx = MinHashIngestIndex(spark, path, compact_every=compact_every)
+        for e, rows in enumerate(batches):
+            idx.absorb(spark.createDataFrame(rows, "doc_id long, text string"), e)
+            if compact_every:
+                assert max(dirs(path)) <= compact_every, (path, e, dirs(path))
+        return sorted((r["doc1"], r["doc2"], r["jac"]) for r in idx.pairs().collect())
+
     # one doc per epoch, every doc a near-dup of doc 0's text, so
     # cross-epoch candidates keep exercising the pruned history fetch
-    texts = [
-        (i, _BASE + f" tail{i % 2}") for i in range(8)
-    ]
-    idx = MinHashIngestIndex(spark, base, compact_every=3)
-    off = MinHashIngestIndex(spark, ref, compact_every=None)
-    for e, (i, t) in enumerate(texts):
-        b = spark.createDataFrame([(i, t)], "doc_id long, text string")
-        idx.absorb(b, e)
-        off.absorb(b, e)
-        dirs = sum(
-            1
-            for d in os.listdir(os.path.join(base, "toks"))
-            if d.startswith("epoch=")
-        )
-        assert dirs <= 3, f"epoch {e}: {dirs} dirs"
-    assert sorted(
-        (r["doc1"], r["doc2"], r["jac"]) for r in idx.pairs().collect()
-    ) == sorted(
-        (r["doc1"], r["doc2"], r["jac"]) for r in off.pairs().collect()
-    )
-    # the no-cadence index accrued one dir per epoch (the disease)
-    assert (
-        sum(
-            1
-            for d in os.listdir(os.path.join(ref, "toks"))
-            if d.startswith("epoch=")
-        )
-        == len(texts)
-    )
+    dense = [[(i, _BASE + f" tail{i % 2}")] for i in range(8)]
+    got = absorb_all(str(tmp_path / "c"), dense, 3)
+    ref = str(tmp_path / "r")
+    assert got == absorb_all(ref, dense, None)
+    # the no-cadence index accrued one dir per epoch in every
+    # subtable (the disease)
+    assert dirs(ref) == [len(dense)] * 3
+    # docs 0 and 1 again, four empty batches apart: the same pair
+    mostly_empty = [[(0, _BASE + " tail0")], [], [], [], [(1, _BASE + " tail1")], []]
+    sparse = absorb_all(str(tmp_path / "e"), mostly_empty, 3)
+    assert sparse and sparse == [p for p in got if p[:2] == (0, 1)]
 
 
 def test_cosine_compact_cadence_bounds_dirs(spark, tmp_path):

@@ -294,6 +294,8 @@ def test_top_user_fn_vectorized_matches_reference(spark):
     round-trip arrays sorted by user_id, argmax on the EXACT _round4
     image with uid tie-break (including totals that straddle a 1e-4
     rounding boundary and negative totals)."""
+    import math
+
     import pandas as pd
 
     from serverless_datalake_aws_spark.plans.streaming_queries import (
@@ -354,3 +356,16 @@ def test_top_user_fn_vectorized_matches_reference(spark):
     assert out2["top_user"][0] == top2[0]
     assert out2["total_value"][0] == _round4(top2[1][1])
     assert st2.get[0] == sorted(acc2)
+    # large magnitude (|t|·1e4 past 2**52): users 5 and 6 tie exactly
+    # at ...0.0313, yet the vectorized round puts 5 a quantum below
+    # (its t·1e4 sits on a half boundary float64 rounds to even) and 6
+    # a quantum above — the shortlist must still reach user 5
+    big = 450_400_000_000 + 1 / 32
+    b3 = pd.DataFrame(
+        {"user_id": [6, 5, 7], "value": [math.nextafter(big, math.inf), big, -big]}
+    )
+    st3 = FakeState()
+    out3 = list(_top_user_fn(("buy",), iter([b3]), st3))[0]
+    acc3, top3 = reference(None, [b3])
+    assert out3["top_user"][0] == top3[0] == 5
+    assert out3["total_value"][0] == _round4(top3[1][1])

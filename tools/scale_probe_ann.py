@@ -81,14 +81,14 @@ def build_embeddings(spark) -> None:
 
 def main() -> None:
     from serverless_datalake_aws_spark.operators.ann import (
+        exact_l2,
+        exact_topk,
         ivf_pq_encode,
         ivf_pq_probe,
         ivf_pq_topk,
         pq_codebooks,
     )
-    from serverless_datalake_aws_spark.functions import vector as VX
     from serverless_datalake_aws_spark.session import get_session
-    from pyspark.sql import Window as W
 
     spark = get_session(app_name="scale_probe_ann")
     spark.sparkContext.setLogLevel("ERROR")
@@ -123,18 +123,8 @@ def main() -> None:
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     )
     t0 = time.time()
-    exact = (
-        VX.brute_scores(emb, qrows, metric="l2")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round("d2", 6).alias("d2"))
-    )
-    we = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
     truth: dict[int, set[int]] = {}
-    for r in (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= TOPK)
-        .collect()
-    ):
+    for r in exact_topk(exact_l2(emb, qrows), TOPK).collect():
         truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     log({"stage": "brute_force_truth", "sec": round(time.time() - t0, 1)})
 
