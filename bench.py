@@ -95,23 +95,40 @@ REGISTRATION_WALL = (
     "m13_vector_index_search",
 )
 
-# The round-over-round continuity subset (VERDICT r8 item 8): the 28
-# queries benched since round 7, so each round's judge can compare one
+# The round-over-round continuity subset (VERDICT r8 item 8) as one
+# {row: round it joined} table, so each round's judge can compare one
 # first-class number instead of recomputing the common-query sum by
-# hand. New headline rows are deliberately NOT in this tuple — they
-# join it once they have a prior-round number to be continuous with.
-CONTINUITY_SUBSET = tuple(
-    n
-    for n in HEADLINE
-    if n
-    not in (
-        # (the r8 additions s24/m07/d20 joined the subset in r10, each
-        # carrying r8+r9 records to be continuous with; m13 joined in
-        # r11 with its r10 record; m10/m12 joined in r12 with their
-        # r11 records — the continuity_subset_r*_total fields below
-        # keep every prior round's sum comparable)
-    )
-)
+# hand. The first 28 rows have been benched since round 7; a later
+# headline row joins once it has a prior-round number to be
+# continuous with, and a new row stays out of the table until then.
+CONTINUITY_JOINED = {
+    **dict.fromkeys(HEADLINE[:28], 7),
+    "s24_sq8_ann_rerank": 10,
+    "m07_stats_pruned_scan": 10,
+    "d20_repeated_substring_spans": 10,
+    "m13_vector_index_search": 11,
+    "m10_hidden_partition_scan": 12,
+    "m12_merge_cow": 12,
+}
+
+
+def continuity_totals(timings: dict[str, float]) -> dict[str, float | int]:
+    """The record's continuity fields, all derived from CONTINUITY_JOINED:
+    the sum and count over every continuity row present, plus one
+    `continuity_subset_r{N}_total` per later join round J (N = J - 1):
+    the sum over the rows that had joined before J, apples-to-apples with
+    round N's record. Rows are summed in HEADLINE order, as the records
+    were."""
+    rows = [n for n in HEADLINE if n in CONTINUITY_JOINED and n in timings]
+    out = {
+        "continuity_subset_total": round(sum(timings[n] for n in rows), 3),
+        "continuity_subset_n": len(rows),
+    }
+    for joined in sorted(set(CONTINUITY_JOINED.values()))[1:]:
+        out[f"continuity_subset_r{joined - 1}_total"] = round(
+            sum(timings[n] for n in rows if CONTINUITY_JOINED[n] < joined), 3
+        )
+    return out
 
 
 def _cpu_probe() -> tuple[float, float]:
@@ -304,62 +321,9 @@ def main() -> None:
         "queries": timings,
         "queries_p50": timings_p50,
         "total_p50": round(sum(timings_p50.values()), 3),
-        # first-class round-over-round number: sum over the 28-query
-        # subset benched since r7 (r7 record 19.11 s idle, r8 20.49 s)
-        "continuity_subset_total": round(
-            sum(timings[n] for n in CONTINUITY_SUBSET if n in timings), 3
-        ),
-        "continuity_subset_n": sum(1 for n in CONTINUITY_SUBSET if n in timings),
-        # apples-to-apples with the r7-r9 records: the same 28-query
-        # subset those rounds published, before s24/m07/d20 joined the
-        # subset in r10 (continuity_subset_n disambiguates which sum a
-        # record carries)
-        "continuity_subset_r9_total": round(
-            sum(
-                timings[n]
-                for n in CONTINUITY_SUBSET
-                if n in timings
-                and n
-                not in (
-                    "s24_sq8_ann_rerank",
-                    "m07_stats_pruned_scan",
-                    "d20_repeated_substring_spans",
-                    "m13_vector_index_search",
-                    "m10_hidden_partition_scan",
-                    "m12_merge_cow",
-                )
-            ),
-            3,
-        ),
-        # apples-to-apples with the r10 record's 31-row subset, before
-        # m13 (whose row is ~90% in-query index build) joined in r11
-        # and m10/m12 joined in r12
-        "continuity_subset_r10_total": round(
-            sum(
-                timings[n]
-                for n in CONTINUITY_SUBSET
-                if n in timings
-                and n
-                not in (
-                    "m13_vector_index_search",
-                    "m10_hidden_partition_scan",
-                    "m12_merge_cow",
-                )
-            ),
-            3,
-        ),
-        # apples-to-apples with the r11 record's 32-row subset, before
-        # m10/m12 joined in r12
-        "continuity_subset_r11_total": round(
-            sum(
-                timings[n]
-                for n in CONTINUITY_SUBSET
-                if n in timings
-                and n
-                not in ("m10_hidden_partition_scan", "m12_merge_cow")
-            ),
-            3,
-        ),
+        # first-class round-over-round numbers: the continuity subset's
+        # sum and size, and each earlier round's subset sum
+        **continuity_totals(timings),
         # registration-wall split (VERDICT r10 #3): build = the eager
         # in-query table/index construction (a one-time cost at real
         # scale), serve = the returned DataFrame's execution; from the

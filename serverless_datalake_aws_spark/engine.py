@@ -37,10 +37,12 @@ from datetime import datetime, timezone
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from serverless_datalake_aws_spark.sources.readers import is_missing_path
 from serverless_datalake_aws_spark.streaming.pipeline import drain
 
 META_SCHEMA = T.StructType(
@@ -89,6 +91,51 @@ def _failed_rules_expr(validate: list[tuple[str, str]]):
             ]
         ),
         lambda x: x.isNotNull(),
+    )
+
+
+def _meta_rows(
+    records: DataFrame,
+    now: datetime,
+    zone_root: str,
+    source: str,
+    owner: str,
+    status: str,
+    tags: Column,
+    description: Column,
+) -> DataFrame:
+    """One unindexed `_meta` row per record, in META_SCHEMA order — the
+    single row shape of ingest-data-lambda.py:65-97. `records` carries
+    id / payload / data_type / ingest_date; `zone_root` is the records
+    directory the `location` column points into."""
+    return records.select(
+        "id",
+        F.lit(now).alias("timestamp"),
+        "data_type",
+        F.lit(source).alias("source"),
+        F.lit(owner).alias("owner"),
+        F.concat(
+            F.lit(f"{zone_root}/data_type="),
+            "data_type",
+            F.lit("/ingest_date="),
+            "ingest_date",
+        ).alias("location"),
+        F.octet_length("payload").cast("long").alias("size_bytes"),
+        F.lit(status).alias("status"),
+        tags.alias("tags"),
+        description.alias("description"),
+        F.lit(False).alias("indexed"),
+        F.lit(None).cast("timestamp").alias("indexed_at"),
+    )
+
+
+def _unindexed() -> Column:
+    """`_meta` rows still waiting for the index. Quarantined rows are
+    unindexed BY DESIGN (their records never reached the raw zone or
+    the index): sweeping them in would falsely mark rejected records
+    as searchable."""
+    return ~F.coalesce("indexed", F.lit(False)) & (
+        F.coalesce("status", F.lit("")) != "quarantined"
     )
 
 
@@ -312,36 +359,13 @@ class DataLakeEngine:
                 ).parquet(f"{self.root}/quarantine/records")
             df = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
             if quarantined_ids:
-                qmeta = bad.select(
-                    "id",
-                    F.lit(now).alias("timestamp"),
-                    "data_type",
-                    F.lit(source).alias("source"),
-                    F.lit(owner).alias("owner"),
-                    F.concat(
-                        F.lit(f"{self.root}/quarantine/records/data_type="),
-                        "data_type",
-                        F.lit("/ingest_date="),
-                        "ingest_date",
-                    ).alias("location"),
-                    F.octet_length("payload").cast("long").alias("size_bytes"),
-                    F.lit("quarantined").alias("status"),
-                    F.col("failed_rules").alias("_fr"),
-                ).select(
-                    "id",
-                    "timestamp",
-                    "data_type",
-                    "source",
-                    "owner",
-                    "location",
-                    "size_bytes",
-                    "status",
-                    F.col("_fr").alias("tags"),  # failed rules ride tags
-                    # (already array<string>; a join/split round-trip
-                    # would corrupt rule names containing a comma)
-                    F.lit("failed ingest validation").alias("description"),
-                    F.lit(False).alias("indexed"),
-                    F.lit(None).cast("timestamp").alias("indexed_at"),
+                # failed rules ride tags (already array<string>; a
+                # join/split round-trip would corrupt rule names
+                # containing a comma)
+                qmeta = _meta_rows(
+                    bad, now, f"{self.root}/quarantine/records",
+                    source, owner, "quarantined",
+                    F.col("failed_rules"), F.lit("failed ingest validation"),
                 )
                 qmeta.write.mode("append").partitionBy("data_type").parquet(
                     self.meta_path
@@ -355,24 +379,10 @@ class DataLakeEngine:
         df.write.mode("append").partitionBy("data_type", "ingest_date").parquet(
             f"{raw_root}/records"
         )
-        meta_rows = df.select(
-            "id",
-            F.lit(now).alias("timestamp"),
-            "data_type",
-            F.lit(source).alias("source"),
-            F.lit(owner).alias("owner"),
-            F.concat(
-                F.lit(f"{raw_root}/records/data_type="),
-                "data_type",
-                F.lit("/ingest_date="),
-                "ingest_date",
-            ).alias("location"),
-            F.octet_length("payload").cast("long").alias("size_bytes"),
-            F.lit("ingested").alias("status"),
-            F.lit(tags).cast("array<string>").alias("tags"),
-            F.lit(description).cast("string").alias("description"),
-            F.lit(False).alias("indexed"),
-            F.lit(None).cast("timestamp").alias("indexed_at"),
+        meta_rows = _meta_rows(
+            df, now, f"{raw_root}/records",
+            source, owner, "ingested",
+            F.lit(tags).cast("array<string>"), F.lit(description).cast("string"),
         )
         # _meta is hive-partitioned by data_type: metadata searches by
         # type prune partitions, and the K7 upsert (_mark_indexed) can
@@ -504,26 +514,11 @@ class DataLakeEngine:
                 ).write.mode("append").partitionBy(
                     "data_type", "ingest_date"
                 ).parquet(f"{raw_root}/records")
-                meta_rows = fresh.select(
-                    "id",
-                    F.lit(now).alias("timestamp"),
-                    "data_type",
-                    F.lit("requeue").alias("source"),
-                    F.lit("system").alias("owner"),
-                    F.concat(
-                        F.lit(f"{raw_root}/records/data_type="),
-                        "data_type",
-                        F.lit("/ingest_date="),
-                        "ingest_date",
-                    ).alias("location"),
-                    F.octet_length("payload").cast("long").alias("size_bytes"),
-                    F.lit("ingested").alias("status"),
-                    F.lit(None).cast("array<string>").alias("tags"),
-                    F.concat(F.lit("requeued from "), "orig_id").alias(
-                        "description"
-                    ),
-                    F.lit(False).alias("indexed"),
-                    F.lit(None).cast("timestamp").alias("indexed_at"),
+                meta_rows = _meta_rows(
+                    fresh, now, f"{raw_root}/records",
+                    "requeue", "system", "ingested",
+                    F.lit(None).cast("array<string>"),
+                    F.concat(F.lit("requeued from "), "orig_id"),
                 )
                 meta_rows.write.mode("append").partitionBy("data_type").parquet(
                     self.meta_path
@@ -1389,8 +1384,6 @@ class DataLakeEngine:
                 F.count("*").alias("n_records"),
                 F.sum("size_bytes").alias("total_bytes"),
             )
-            from pyspark.errors import AnalysisException
-
             try:
                 cur = self.spark.read.parquet(out)
             except AnalysisException as e:
@@ -1399,7 +1392,7 @@ class DataLakeEngine:
                 # permission, transient IO) must propagate — swallowing
                 # it would reset the accumulated summary to one delta
                 # (the ADVICE r4 MaintainedRollup bug, same pattern)
-                if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+                if not is_missing_path(e):
                     raise
                 cur = None
             if cur is None or not same_lineage:
@@ -1475,8 +1468,6 @@ class DataLakeEngine:
         record count and indexed tally. Driver-side directory walk is
         metadata-only (an S3 LIST per prefix at scale; the inventory-
         report route past ~10^8 objects is documented in SCALE.md)."""
-        from pyspark.errors import AnalysisException
-
         if self.is_remote:
             # fail-closed like every other local-FS-walking op: the
             # pathlib walk answers 0 files for every URI, so a populated
@@ -1506,7 +1497,7 @@ class DataLakeEngine:
         try:
             meta = self.meta()
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            if is_missing_path(e):
                 return report  # pre-ingest lake: zone rows only
             raise
         status = meta.groupBy(F.col("status").alias("name")).agg(
@@ -2004,14 +1995,7 @@ class DataLakeEngine:
     def _mark_indexed_inner(self, ids: DataFrame | None = None, lock=None) -> None:
         meta = self.meta()
         if ids is None:
-            # quarantined rows are unindexed BY DESIGN (their records
-            # never reached the raw zone or the index) — sweeping them
-            # into the stamp would falsely mark rejected records as
-            # searchable
-            ids = meta.filter(
-                ~F.coalesce("indexed", F.lit(False))
-                & (F.coalesce("status", F.lit("")) != "quarantined")
-            ).select("id")
+            ids = meta.filter(_unindexed()).select("id")
         hit_ids = F.broadcast(
             ids.select("id").distinct().withColumn("_hit", F.lit(True))
         )
@@ -2092,16 +2076,21 @@ class DataLakeEngine:
             if old.exists():
                 shutil.rmtree(old)
         # A crash between `src.rename(dst)` and `rmtree(old)` strands an
-        # _old dir whose stage entry is gone (legacy ".old" suffix names
-        # from pre-r9 swaps are reclaimed the same way).
-        for old in Path(self.meta_path).glob("_old.data_type=*"):
-            dst = old.with_name(old.name[len("_old."):])
-            if dst.exists():
-                shutil.rmtree(old)
-            else:
-                old.rename(dst)
-        for old in Path(self.meta_path).glob("data_type=*.old"):  # legacy
-            dst = old.with_name(old.name[: -len(".old")])
+        # _old dir whose stage entry is gone.
+        self._settle_meta_swap(tmp)
+
+    def _settle_meta_swap(self, tmp: Path) -> None:
+        """Drop the stage and settle every hidden `_old.` partition (and
+        legacy `.old` suffix names from older swaps): reclaim it when its
+        live partition exists (that partition's swap finished), rename it
+        back otherwise. The tail of a publish and the whole roll-back."""
+        meta = Path(self.meta_path)
+        for old in (*meta.glob("_old.data_type=*"), *meta.glob("data_type=*.old")):
+            name = old.name
+            if name.startswith("_old."):
+                dst = old.with_name(name[len("_old."):])
+            else:  # legacy
+                dst = old.with_name(name[: -len(".old")])
             if dst.exists():
                 shutil.rmtree(old)
             else:
@@ -2127,24 +2116,11 @@ class DataLakeEngine:
             # the dead owner's lock goes stale.
             return
         tmp = Path(self.meta_path + ".mark.tmp")
-        if tmp.exists() and (tmp / _SWAP_READY).exists():
+        if (tmp / _SWAP_READY).exists():
             self._publish_meta_swap(tmp)
-            return
-        # no committed stage: anything half-swapped rolls back
-        for old in Path(self.meta_path).glob("_old.data_type=*"):
-            dst = old.with_name(old.name[len("_old."):])
-            if dst.exists():
-                shutil.rmtree(old)  # swap of this partition had finished
-            else:
-                old.rename(dst)
-        for old in Path(self.meta_path).glob("data_type=*.old"):  # legacy
-            dst = old.with_name(old.name[: -len(".old")])
-            if dst.exists():
-                shutil.rmtree(old)
-            else:
-                old.rename(dst)
-        if tmp.exists():
-            shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            # no committed stage: anything half-swapped rolls back
+            self._settle_meta_swap(tmp)
 
     # -- search surface (SURVEY §2.8) ----------------------------------------
     def _tokenize(self, recs: DataFrame) -> DataFrame:
@@ -2172,64 +2148,42 @@ class DataLakeEngine:
         )
         return self.search_index()
 
-    def index_incremental(self) -> int:
-        """Incremental indexing (K9/X3 single-doc path, batched): only
-        records whose metadata says indexed=false are tokenized and
-        appended — an anti-join against the indexed set instead of the
-        reference's re-index-everything or one-HTTP-call-per-doc.
-        Returns the number of newly indexed records."""
-        # PIN the id snapshot: append and stamp must act on the SAME
-        # set — a lazy plan re-evaluated at stamp time would sweep rows
-        # ingested in between into the stamp with no tokens written
-        # (invisible to search forever). _pin_ids, not localCheckpoint:
-        # checkpoint blocks are never reclaimed in-session.
-        pending = self._pin_ids(
-            self.meta().filter(
-                ~F.coalesce("indexed", F.lit(False))
-                # quarantined rows have no records to index; stamping
-                # them would falsely claim rejected data is searchable
-                & (F.coalesce("status", F.lit("")) != "quarantined")
-            )
-        )
-        n = pending.count()
-        if n == 0:
-            return 0
-        # ids already present in the index (a writer died between its
-        # index append and the indexed-stamp) must not get a second set
-        # of token rows — append only the truly-missing ids, but stamp
-        # ALL pending ids so the unstamped-but-indexed ones converge
-        to_append = pending
-        from pyspark.errors import AnalysisException
-
-        already = None
+    def _index_append(self, ids: DataFrame) -> int:
+        """The one append-and-stamp step behind `index_incremental` and
+        `index_cdc` — the reference's single `index_in_elasticsearch`
+        (index-data-lambda.py:390-411). Tokenizes and appends the raw
+        records of `ids` not yet in the index, then stamps what is
+        searchable. Returns the number of ids stamped."""
+        # content-keyed idempotence: a writer can die between the index
+        # append and the stamp, and foreachBatch side effects are
+        # at-least-once, so an id already carrying index tokens is never
+        # appended again (column-pruned anti-join on the index's id
+        # column) but is still stamped — it converges to indexed=true
         try:
             already = (
                 self.spark.read.parquet(self.search_index_path)
                 .select("id")
                 .distinct()
             )
-            to_append = pending.join(already, "id", "left_anti")
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and (
-                "Path does not exist" not in str(e)
-            ):
+            if not is_missing_path(e):
                 raise
-        # the crash-convergence set (pending ids ALREADY carrying index
-        # tokens) must be pinned BEFORE the append below: the parquet
-        # relation re-lists files at action time, so evaluating this
-        # join after the append would sweep the freshly-appended ids in
-        # and double-count them
+            already = None
+        to_append = ids if already is None else ids.join(already, "id", "left_anti")
+        # pin the converged set BEFORE the append: the parquet relation
+        # re-lists files at action time, so evaluating ids∩already after
+        # the append would sweep the freshly-appended ids in and
+        # double-count them
         converged_rows = (
             []
             if already is None
-            else pending.join(already, "id", "left_semi")
+            else ids.join(already, "id", "left_semi")
             .select("id")
             .distinct()
             .collect()
         )
-        # persist so the id pin and the token append read the SAME raw
-        # pass (the add_to_vector_index convention) — re-deriving
-        # new_recs for the stamp was a second full raw scan per call
+        # persist so the id collect and the token append read the SAME
+        # raw pass (the add_to_vector_index convention)
         new_id_rows: list = []
         try:
             new_recs = self.records("raw").join(
@@ -2251,28 +2205,39 @@ class DataLakeEngine:
             finally:
                 new_recs.unpersist()
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and (
-                "Path does not exist" not in str(e)
-            ):
+            if not is_missing_path(e):
                 raise
-            # raw zone fully expired/absent: nothing is appendable; the
-            # pending ids stay indexed=false (audit-only metadata)
-        # stamp only ids that are actually SEARCHABLE: the ones whose
-        # tokens just landed plus the pinned crash-convergence set. A
-        # pending id whose raw record no longer exists (expire() keeps
-        # _meta as the audit trail) must stay indexed=false — stamping
-        # it would assert searchability for a record with zero index
-        # tokens, forever.
+            # raw zone fully expired/absent: nothing is appendable
+        # The index_incremental invariant: stamp only ids that are
+        # actually SEARCHABLE — the ones whose tokens just landed plus
+        # the converged set. An id whose raw record no longer exists
+        # (expire() keeps _meta and the changelog as the audit trail)
+        # appends zero tokens and must stay indexed=false; stamping it
+        # would assert searchability for a tokenless record, forever.
         stampable = self.spark.createDataFrame(
             new_id_rows + converged_rows, "id string"
         )
         self._mark_indexed(stampable)
-        # return what this call actually made searchable-stamped (new
-        # tokens + crash-converged), NOT pending.count(): pending ids
-        # whose raw record vanished are deliberately never stamped, and
-        # reporting them as "newly indexed" forever would make a
-        # poll-until-zero caller loop indefinitely
         return len(new_id_rows) + len(converged_rows)
+
+    def index_incremental(self) -> int:
+        """Incremental indexing (K9/X3 single-doc path, batched): only
+        records whose metadata says indexed=false are tokenized and
+        appended — an anti-join against the indexed set instead of the
+        reference's re-index-everything or one-HTTP-call-per-doc.
+        Shares its append-and-stamp step (`_index_append`) with
+        `index_cdc`. Returns the number of newly indexed records:
+        pending ids whose raw record vanished are never stamped, so a
+        poll-until-zero caller terminates."""
+        # PIN the id snapshot: append and stamp must act on the SAME
+        # set — a lazy plan re-evaluated at stamp time would sweep rows
+        # ingested in between into the stamp with no tokens written
+        # (invisible to search forever). _pin_ids, not localCheckpoint:
+        # checkpoint blocks are never reclaimed in-session.
+        pending = self._pin_ids(self.meta().filter(_unindexed()))
+        if pending.count() == 0:
+            return 0
+        return self._index_append(pending)
 
     def index_cdc(self, timeout_s: int = 600, trigger: dict | None = None):
         """True CDC indexing (S11): a checkpointed file stream over the
@@ -2282,9 +2247,9 @@ class DataLakeEngine:
         instead of at-least-once Lambda retries.
 
         Each micro-batch carries only the metadata rows appended since
-        the last run (checkpoint tracks consumed files); their records
-        are tokenized and appended to the index and exactly those ids
-        are stamped — no full rebuild, no full-meta scan.
+        the last run (checkpoint tracks consumed files); its ids go
+        through the same append-and-stamp step as `index_incremental`
+        (`_index_append`) — no full rebuild, no full-meta scan.
 
         `trigger` defaults to `{"availableNow": True}`: drain-then-stop
         (returns None after the drain completes). Pass
@@ -2299,80 +2264,7 @@ class DataLakeEngine:
         )
 
         def _handle(batch_df: DataFrame, epoch_id: int) -> None:
-            ids = batch_df.select("id").distinct()
-            # content-keyed idempotence: foreachBatch side effects are
-            # at-least-once, and a retried batch (or a crash between
-            # the index append and the indexed-stamp) must not append
-            # the same ids' token rows twice — drop every id already
-            # present in the index before appending. Column-pruned
-            # scan of the index's id column only; _mark_indexed is
-            # idempotent by construction (stamping a stamped id).
-            from pyspark.errors import AnalysisException
-
-            to_append = ids
-            already = None
-            try:
-                already = self.spark.read.parquet(
-                    self.search_index_path
-                ).select("id").distinct()
-                to_append = ids.join(already, "id", "left_anti")
-            except AnalysisException as e:
-                if "PATH_NOT_FOUND" not in str(e) and (
-                    "Path does not exist" not in str(e)
-                ):
-                    raise
-            # pin the crash-redelivery set BEFORE the append: the
-            # parquet relation re-lists files at action time, so
-            # evaluating ids∩already afterwards would also sweep in the
-            # freshly-appended ids (harmless for stamping, wrong as a
-            # converged-set definition)
-            converged_rows = (
-                []
-                if already is None
-                else ids.join(already, "id", "left_semi")
-                .select("id")
-                .distinct()
-                .collect()
-            )
-            # persist so the id pin and the token append read the SAME
-            # raw pass; guard the append on non-empty (an unconditional
-            # empty append materializes a schema-less _SUCCESS-only
-            # index dir that breaks every later schema-inferring read);
-            # a fully-absent raw zone means nothing is appendable
-            new_id_rows: list = []
-            try:
-                new_recs = self.records("raw").join(
-                    F.broadcast(to_append), "id", "left_semi"
-                ).persist()
-                try:
-                    new_id_rows = new_recs.select("id").distinct().collect()
-                    if new_id_rows:
-                        self._tokenize(new_recs).write.mode(
-                            "append"
-                        ).partitionBy("data_type").parquet(
-                            self.search_index_path
-                        )
-                finally:
-                    new_recs.unpersist()
-            except AnalysisException as e:
-                if "PATH_NOT_FOUND" not in str(e) and (
-                    "Path does not exist" not in str(e)
-                ):
-                    raise
-            # stamp only ids that are actually SEARCHABLE (the
-            # index_incremental invariant): the ones whose tokens just
-            # landed, plus the batch ids ALREADY in the index — the
-            # crash-redelivery set (a crash between the index append
-            # and the stamp redelivers the batch with an empty append
-            # set, and those ids must still converge to indexed=true).
-            # A batch id whose raw record no longer exists (expire()
-            # keeps _meta + changelog as the audit trail) appends zero
-            # tokens and must stay indexed=false — stamping it would
-            # assert searchability for a tokenless record, forever.
-            stampable = self.spark.createDataFrame(
-                new_id_rows + converged_rows, "id string"
-            )
-            self._mark_indexed(stampable)
+            self._index_append(batch_df.select("id").distinct())
 
         if trigger is None:
             trigger = {"availableNow": True}
@@ -2788,8 +2680,7 @@ class DataLakeEngine:
         a rebuild."""
         base = self._vector_current(name)
         cent_rows = [
-            (r["cid"], r["embedding"])
-            for r in self.spark.read.parquet(f"{base}/codebook").collect()
+            (r["cid"], r["embedding"]) for r in self._vector_codebook(base)
         ]
         from serverless_datalake_aws_spark.functions import vector as VX
 

@@ -28,6 +28,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from serverless_datalake_aws_spark.sources.readers import is_missing_path
+
 
 def partial_rollup(
     df: DataFrame,
@@ -226,10 +228,7 @@ class _EpochStateStore:
         try:
             return self.spark.read.parquet(target)
         except AnalysisException as e:
-            msg = str(e)
-            if ptr is None and (
-                "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-            ):
+            if ptr is None and is_missing_path(e):
                 return None
             raise
 
@@ -482,7 +481,7 @@ class EpochPartitionedTable:
         try:
             df = self.spark.read.parquet(f"{self.path}/{sub}")
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            if is_missing_path(e):
                 return None
             raise
         if "epoch" not in df.columns:

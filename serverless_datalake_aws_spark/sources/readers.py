@@ -65,6 +65,15 @@ def detect_format(path: str | Path) -> str | None:
     return kind
 
 
+def is_missing_path(e: Exception) -> bool:
+    """True when a Spark read failed only because its path does not
+    exist yet (a lake table before its first write). Callers treat that
+    as empty; every other AnalysisException (corrupt footer, permission,
+    transient IO) is a real error and must propagate."""
+    msg = str(e)
+    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+
+
 def _sniff_json_multiline(path: str) -> bool:
     """JSON-array vs NDJSON sniff (S2/S3): the reference checks whether
     the body starts with '[' (lambda-function.py:90-95). We sniff the

@@ -323,15 +323,16 @@ def merge_versioned(
             f"merge_versioned requires a parquet versioned table; "
             f"{vdir} holds non-parquet data files"
         )
-    # materialize the footer stats ONCE: collect_file_stats is a lazy
-    # mapInPandas plan, and the three metadata reads below (overlap
-    # join, stat-less files, indexed-file inventory) would each re-run
-    # the whole footer pass through fresh Python workers (~0.55 s per
-    # re-run at the m12 fixture — 3 passes where 1 suffices). The rows
-    # are metadata-scale (#files × #cols), the same order as the
-    # `files` list this function already holds on the driver.
+    # materialize the key column's footer stats ONCE: collect_file_stats
+    # is a lazy mapInPandas plan, and the three metadata reads below
+    # (overlap join, stat-less files, indexed-file inventory) would each
+    # re-run the whole footer pass through fresh Python workers (~0.55 s
+    # per re-run at the m12 fixture — 3 passes where 1 suffices). Only
+    # the key column's rows are read, so only they are collected: at
+    # most one row per file, the same order as the `files` list this
+    # function already holds on the driver, whatever the table's width.
     lazy_stats = collect_file_stats(spark, vdir, files=files)
-    stat_rows = lazy_stats.collect()
+    stat_rows = lazy_stats.filter(F.col("column") == key).collect()
     stats = spark.createDataFrame(stat_rows, lazy_stats.schema)
     # canonicalize the source key to the SAME numeric image the stats
     # index stores (stats.py _canon/_canon_arrow): timestamps are unix
@@ -361,11 +362,7 @@ def merge_versioned(
     # computed for EVERY action (even matched="keep" needs it to know
     # which target keys exist, so not-matched inserts don't duplicate
     # matched rows); only update/delete use it as the REWRITE set
-    kstats = stats.filter(
-        (F.col("column") == key)
-        & F.col("min_v").isNotNull()
-        & F.col("max_v").isNotNull()
-    )
+    kstats = stats.filter(F.col("min_v").isNotNull() & F.col("max_v").isNotNull())
     # file overlaps iff any source key falls in [min, max]; the
     # numeric image compares at double precision (monotonic — can
     # only over-mark, never under-mark), strings lexically
@@ -387,10 +384,7 @@ def merge_versioned(
     # set math over the already-collected metadata rows (zero extra
     # Spark jobs — these two reads used to be full footer-pass re-runs)
     overlap |= {
-        r["file"]
-        for r in stat_rows
-        if r["column"] == key
-        and (r["min_v"] is None or r["max_v"] is None)
+        r["file"] for r in stat_rows if r["min_v"] is None or r["max_v"] is None
     }
     overlap |= set(files) - {r["file"] for r in stat_rows}
     rewrite = overlap if matched in ("update", "delete") else set()

@@ -945,3 +945,84 @@ def test_index_incremental_never_creates_schemaless_index(engine, spark):
     engine.ingest_batch([{"product": "Cam", "quantity": 1}], data_type="gear")
     assert engine.index_incremental() == 1
     assert engine.search(term="cam").count() == 1
+
+
+@pytest.fixture(scope="module")
+def crashed_index_lake(spark, tmp_path_factory):
+    """A lake left mid-way by earlier indexing, for both index entry
+    points to start from: `converged` has its tokens in the index but an
+    unstamped `_meta` row (a writer died between append and stamp),
+    `vanished` lost its raw record, `quarantined` failed validation and
+    `fresh` is a plain new record. Returns (lake dir, ids, payloads)."""
+    import shutil as _sh
+    from pathlib import Path as _P
+
+    eng = DataLakeEngine(spark, tmp_path_factory.mktemp("parity") / "lake")
+    converged, fresh = eng.ingest_batch(
+        [{"text": "alpha beta beta"}, {"text": "gamma delta"}], data_type="t"
+    )
+    (vanished,) = eng.ingest_batch([{"text": "lost words"}], data_type="gone")
+    _sh.rmtree(_P(eng.zone("raw")) / "records" / "data_type=gone")
+    assert eng.ingest_batch(
+        [{"v": -1}],
+        data_type="t",
+        validate=[("nonneg", "CAST(get_json_object(payload, '$.v') AS INT) >= 0")],
+    ) == []
+    eng._tokenize(
+        eng.records("raw").filter(F.col("id") == converged)
+    ).write.mode("append").partitionBy("data_type").parquet(eng.search_index_path)
+    meta = {r["id"]: r for r in eng.meta().collect()}
+    (quarantined,) = [i for i, r in meta.items() if r["status"] == "quarantined"]
+    assert not any(r["indexed"] for r in meta.values())
+    payloads = {
+        r["id"]: r["payload"] for r in eng.records("raw").collect()
+    }
+    ids = dict(
+        converged=converged, fresh=fresh, vanished=vanished, quarantined=quarantined
+    )
+    return _P(eng.root), ids, payloads
+
+
+@pytest.mark.parametrize("entry", ["index_incremental", "index_cdc"])
+def test_index_entry_points_agree(spark, tmp_path, crashed_index_lake, entry):
+    """Both index entry points run the same append-and-stamp step, so
+    from the same lake state they leave the same index and `_meta`: no
+    duplicate (id, token) rows, the crash-converged id stamped, the
+    vanished and quarantined ids still unindexed. The expected state is
+    derived here from the records' payloads, independently of either
+    entry point."""
+    import re
+    import shutil as _sh
+    from collections import Counter
+
+    template, ids, payloads = crashed_index_lake
+    _sh.copytree(template, tmp_path / "lake")
+    eng = DataLakeEngine(spark, tmp_path / "lake")
+    n = getattr(eng, entry)()
+    if entry == "index_incremental":
+        assert n == 2  # fresh appended + converged stamped
+
+    idx = eng.search_index()
+    assert idx.groupBy("id", "token").count().filter("count > 1").count() == 0
+    want_index = {
+        ("t", i, tok, tf)
+        for i in (ids["converged"], ids["fresh"])
+        for tok, tf in Counter(
+            t for t in re.split("[^a-z0-9]+", payloads[i].lower()) if t
+        ).items()
+    }
+    got_index = {
+        (r["data_type"], r["id"], r["token"], r["tf"]) for r in idx.collect()
+    }
+    assert got_index == want_index
+
+    got_meta = {
+        r["id"]: (r["data_type"], r["status"], bool(r["indexed"]))
+        for r in eng.meta().collect()
+    }
+    assert got_meta == {
+        ids["converged"]: ("t", "ingested", True),
+        ids["fresh"]: ("t", "ingested", True),
+        ids["vanished"]: ("gone", "ingested", False),
+        ids["quarantined"]: ("t", "quarantined", False),
+    }

@@ -67,6 +67,42 @@ def test_merge_is_file_level_cow(spark, tmp_path):
         assert f.stat().st_ino == v1_files[orig]  # same inode = no copy
 
 
+def test_merge_collects_one_stats_row_per_file(spark, tmp_path, monkeypatch):
+    """The footer stats merge_versioned collects to the driver are the
+    key column's only: one row per file whatever the table's width. A
+    3-column and an 8-column table with the same file count collect the
+    same number of stats rows, and the two merges agree."""
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+    stats_rows: list[int] = []
+
+    def recording_collect(self):
+        rows = collect(self)
+        if {"file", "column", "min_v", "max_v"} <= set(self.columns):
+            stats_rows.append(len(rows))
+        return rows
+
+    merged = []
+    for width in (3, 8):
+        extra = [(F.col("id") + i).alias(f"c{i}") for i in range(width - 2)]
+        root = tmp_path / f"w{width}"
+        write_versioned(_table(spark).select("id", "v", *extra), root)
+        n_files = len(list((root / "_v=1").glob("*.parquet")))
+        assert n_files == 8
+        src = spark.createDataFrame(
+            [(5, -1), (2000, -2)], "id long, v long"
+        ).select("id", "v", *extra)
+        stats_rows.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(frame, "collect", recording_collect)
+            merge_versioned(spark, root, src, "id")
+        assert stats_rows == [n_files], width
+        merged.append(_rows(spark, root))
+    assert merged[0] == merged[1]
+    assert (5, -1) in merged[0] and (2000, -2) in merged[0]
+    assert len(merged[0]) == 1001
+
+
 def test_merge_delete(spark, tmp_path):
     root = tmp_path / "t"
     write_versioned(_table(spark), root)
