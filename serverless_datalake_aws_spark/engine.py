@@ -2080,17 +2080,14 @@ class DataLakeEngine:
         self._settle_meta_swap(tmp)
 
     def _settle_meta_swap(self, tmp: Path) -> None:
-        """Drop the stage and settle every hidden `_old.` partition (and
-        legacy `.old` suffix names from older swaps): reclaim it when its
-        live partition exists (that partition's swap finished), rename it
-        back otherwise. The tail of a publish and the whole roll-back."""
+        """Drop the stage and settle every hidden `_old.` partition:
+        reclaim it when its live partition exists (that partition's swap
+        finished), rename it back otherwise. The tail of a publish and
+        the whole roll-back. (A live `data_type=X.old` is a data_type
+        value like any other, never swap debris.)"""
         meta = Path(self.meta_path)
-        for old in (*meta.glob("_old.data_type=*"), *meta.glob("data_type=*.old")):
-            name = old.name
-            if name.startswith("_old."):
-                dst = old.with_name(name[len("_old."):])
-            else:  # legacy
-                dst = old.with_name(name[: -len(".old")])
+        for old in meta.glob("_old.data_type=*"):
+            dst = old.with_name(old.name[len("_old."):])
             if dst.exists():
                 shutil.rmtree(old)
             else:
@@ -2100,8 +2097,8 @@ class DataLakeEngine:
     def _recover_meta_swap(self) -> None:
         """Converge `_meta` after a writer died mid-_mark_indexed: roll
         the staged swap forward when its _SWAP_READY flag committed,
-        roll it back (restore any .old partition, drop the stage)
-        otherwise. Idempotent and cheap (two globs) — runs before every
+        roll it back (restore any `_old.` partition, drop the stage)
+        otherwise. Idempotent and cheap (one glob) — runs before every
         metadata scan."""
         from serverless_datalake_aws_spark.sources.commitlog import FileLock
 

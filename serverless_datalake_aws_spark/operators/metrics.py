@@ -22,8 +22,9 @@ shuffle_bytes).
   execution of a semantically-equal plan carries the tag.
 - `shuffle_bytes` sums the `shuffle bytes written` SQLMetric over the
   executed plan (AQE-aware: the walk takes `finalPhysicalPlan` and
-  unwraps QueryStageExec nodes), `out_rows` is the root operator's
-  `number of output rows`.
+  unwraps QueryStageExec nodes), `out_rows` the rows the driver
+  received (the first `number of output rows` from the root, capped by
+  a top-k or collect-limit root's limit).
 
 Listener callbacks run on Spark's async listener bus, so the callback
 does NO Spark work (it appends to an in-memory buffer — a re-entrant
@@ -32,14 +33,19 @@ buffer to the `_metrics` parquet table via pyarrow directly. At scale
 this is exactly the CloudWatch agent shape: cheap in-path capture,
 asynchronous batched export, one small file per flush (compact with
 sources/compact.py like any other small-file feed).
+
+`WorkWindow` is the pull-based side (bench.py's row profiles, the tools'
+plans); `phase(name)` times a block into the window open on its thread.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 import time
 import uuid
+from collections import defaultdict
 from datetime import datetime, timezone
 
 METRIC_COLUMNS = (
@@ -118,6 +124,9 @@ def _metric_values(node):
         yield str(kv._2().name()), kv._2().value()
 
 
+_DRIVER_MERGES = ("TakeOrderedAndProjectExec", "CollectLimitExec")
+
+
 class MetricsRecorder:
     """Session-wide query-execution telemetry with parquet export."""
 
@@ -148,8 +157,9 @@ class MetricsRecorder:
         try:
 
             def _read_metrics():
-                sh, rows = 0, -1
+                sh, rows, root = 0, -1, None
                 for node in _walk_final_plan(qe.executedPlan()):
+                    root = node if root is None else root
                     for name, value in _metric_values(node):
                         if "shuffle bytes written" in name:
                             sh += int(value)
@@ -157,6 +167,13 @@ class MetricsRecorder:
                             # first node carrying the metric on the
                             # walk from the root = result cardinality
                             rows = int(value)
+                if rows >= 0 and root.getClass().getSimpleName() in _DRIVER_MERGES:
+                    # below this root each partition sends up to `limit`
+                    # rows; the driver keeps `limit` (-1: all) of them
+                    # and drops the first `offset`
+                    lim = root.limit()
+                    rows = min(rows, lim) if lim >= 0 else rows
+                    rows = max(rows - root.offset(), 0)
                 return sh, rows
 
             shuffle, out_rows = _read_metrics()
@@ -290,3 +307,83 @@ class MetricsRecorder:
                 ]
             ),
         )
+
+
+_open = threading.local()  # .window: the WorkWindow open on this thread
+
+
+def _stored(read, key: int):
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return read(key)
+    except Py4JJavaError as exc:  # NoSuchElementException
+        raise LookupError(f"{key} is no longer in Spark's status store") from exc
+
+
+class WorkWindow:
+    """The Spark work run while a `with` block is open, read from the
+    status stores Spark keeps even with the UI off. Jobs count by id, so
+    a stream thread's `foreachBatch` jobs count too. Reads raise
+    LookupError where Spark evicted the window (it keeps 1000 of each)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.phases: dict[str, float] = defaultdict(float)  # phase(): wall s
+
+    def _mark(self) -> tuple[int, int]:
+        # next job and SQL execution ids once every posted event is in
+        # the stores (which list executions in id order)
+        sc = self.spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        store = self.spark._jsparkSession.sharedState().statusStore()
+        n = store.executionsCount()
+        last = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+        return sc.dagScheduler().numTotalJobs(), last + 1
+
+    def __enter__(self) -> "WorkWindow":
+        _open.window = self
+        self._jobs0, self._execs0 = self._mark()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._jobs1, self._execs1 = self._mark()
+        _open.window = None
+
+    def work(self) -> dict:
+        """Jobs; stages that ran tasks (not skipped for reused shuffle
+        output), their tasks, single-task ones, shuffle bytes, run time."""
+        store = self.spark.sparkContext._jsc.sc().statusStore()
+        stages = set()
+        for j in range(self._jobs0, self._jobs1):
+            ids = _stored(store.job, j).stageIds()
+            stages.update(ids.apply(i) for i in range(ids.size()))
+        out = {"jobs": self._jobs1 - self._jobs0, "stages": 0, "tasks": 0}
+        out.update(single_task_stages=0, shuffle_bytes=0, executor_run_ms=0)
+        for st in (_stored(store.lastStageAttempt, s) for s in stages):
+            ran = st.numCompleteTasks() + st.numFailedTasks()
+            out["stages"] += ran > 0
+            out["tasks"] += ran
+            out["single_task_stages"] += ran > 0 and st.numTasks() == 1
+            out["shuffle_bytes"] += st.shuffleWriteBytes()
+            out["executor_run_ms"] += st.executorRunTime()
+        return out
+
+    def plans(self) -> list[str]:
+        """The final formatted physical plan of each SQL execution."""
+        store = self.spark._jsparkSession.sharedState().statusStore()
+        read = lambda e: store.execution(e).get()  # noqa: E731
+        return [
+            _stored(read, e).physicalPlanDescription()
+            for e in range(self._execs0, self._execs1)
+        ]
+
+
+@contextlib.contextmanager
+def phase(name: str):
+    """Add the block's wall time to phases[name] of the WorkWindow open
+    on this thread; outside a window, just run the block."""
+    window, t0 = getattr(_open, "window", None), time.perf_counter()
+    yield
+    if window is not None:
+        window.phases[name] += time.perf_counter() - t0

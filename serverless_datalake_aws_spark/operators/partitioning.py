@@ -43,7 +43,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serverless_datalake_aws_spark.plancap import stamp as _stamp_plan
 
 RANGE_KINDS = ("identity", "days", "months", "hours", "truncate")
 ALL_KINDS = RANGE_KINDS + ("bucket",)
@@ -151,7 +150,6 @@ def hidden_write(
             int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
         )
         out = out.repartition(width, *[F.col(n) for n in names])
-    _stamp_plan(f"hidden_write:{path.rstrip('/').rsplit('/', 1)[-1]}", out)
     out.write.mode(mode).partitionBy(*names).parquet(path)
 
 

@@ -70,7 +70,6 @@ from serverless_datalake_aws_spark.operators.banding import (
 from serverless_datalake_aws_spark.operators.incremental import (
     EpochPartitionedTable,
 )
-from serverless_datalake_aws_spark.plancap import stamp as _stamp_plan
 
 
 def _check_meta(path: str, meta: dict) -> None:
@@ -280,9 +279,7 @@ class MinHashIngestIndex:
             # pick the join side; forcing a broadcast of an unbounded
             # id set trades a driver OOM for an executor one
             pruned = pruned.join(need, "doc_id", "semi")
-        pruned = pruned.drop("tb") if "tb" in pruned.columns else pruned
-        _stamp_plan("st15_stream_minhash_index:history_fetch", pruned)
-        return pruned
+        return pruned.drop("tb") if "tb" in pruned.columns else pruned
 
     def absorb(self, batch: DataFrame, epoch_id: int) -> None:
         if epoch_id <= self.state.committed():
@@ -484,9 +481,7 @@ class CosineIngestIndex:
         cids = [r["cid"] for r in assigned.select("cid").distinct().collect()]
         if not cids:
             return None
-        pruned = old.filter(F.col("cid").isin(cids))
-        _stamp_plan("st20_stream_semantic_dedup:history_fetch", pruned)
-        return pruned
+        return old.filter(F.col("cid").isin(cids))
 
     def absorb(self, batch: DataFrame, epoch_id: int) -> None:
         from serverless_datalake_aws_spark.functions import vector as VX

@@ -16,25 +16,21 @@ from __future__ import annotations
 import datetime as dt
 import shutil
 import tempfile
-import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serverless_datalake_aws_spark.catalog import table
-from serverless_datalake_aws_spark.plancap import stamp as _stamp_plan
+from serverless_datalake_aws_spark.operators.metrics import phase
 from serverless_datalake_aws_spark.plans import query
 
-# Per-invocation phase split for the registration-wall entries
-# (m07/m10/m12/m13), published by bench.py as queries_build/
-# queries_serve (VERDICT r10 #3): these queries deliberately pay an
+# The registration-wall entries (m07/m10/m12/m13) deliberately pay an
 # in-query table/index CONSTRUCTION (a one-time registration cost at
-# real scale) before a cheap serving read, and both phases complete
-# inside the callable (results must materialize before the temp
-# workdir vanishes) — so a caller-side call-vs-write split cannot see
-# the boundary. Each entry overwrites its row on every invocation;
-# readers take the value right after the call they timed.
-PHASE_TIMINGS: dict[str, dict[str, float]] = {}
+# real scale) before a cheap serving read, and both complete inside the
+# callable (results must materialize before the temp workdir vanishes),
+# so a caller cannot see the boundary: each marks it with
+# phase("build") / phase("serve"), which bench.py publishes as
+# queries_build / queries_serve (VERDICT r10 #3).
 
 
 @query(
@@ -76,66 +72,60 @@ def m07_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events")
     work = tempfile.mkdtemp(prefix="m07_")
-    t_start = _time.perf_counter()
     try:
-        # sticky like catalog.table's conf pins: the driver's plain
-        # session writes INT96 timestamps by default, and INT96 carries
-        # no footer min/max — the stats index would silently go blind
-        # on ts (fail-open: correct, but nothing prunes)
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        ev.select("event_type", "ts", "value").repartitionByRange(
-            8, "ts"
-        ).write.parquet(f"{work}/events")
-        lazy_stats = collect_file_stats(spark, f"{work}/events")
-        # materialize the index ONCE: collect_file_stats is a lazy
-        # mapInPandas plan, and every downstream action (the prune
-        # inside pruned_scan) would re-run the whole footer pass
-        # through fresh Python workers. The index is metadata-scale
-        # (#files × #cols rows) so a local copy is the honest analogue
-        # of persisting the stats table next to the data.
-        stat_rows = lazy_stats.collect()
-        stats = spark.createDataFrame(stat_rows, lazy_stats.schema)
-        # the zone maps already hold the global min(ts) — read it from
-        # the collected metadata rows (min over #files values) instead
-        # of paying a second full scan of events just to place the day
-        # window (footer min is the exact column min; ts canonicalizes
-        # to unix micros per collect_file_stats). Python min over the
-        # rows already on the driver: the Spark agg this replaces was
-        # a whole job dispatched against an 8-row local relation (the
-        # r10 m07 job-count wall, VERDICT r10 #3).
-        min_us = min(
-            int(r["min_v"])
-            for r in stat_rows
-            if r["column"] == "ts" and r["min_v"] is not None
-        )
-        min_ts = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=min_us)
-        lo = min_ts + dt.timedelta(days=1)
-        hi = min_ts + dt.timedelta(days=2)
-        t_built = _time.perf_counter()  # clustered copy + stats index done
-        out = (
-            pruned_scan(spark, f"{work}/events", stats, "ts", lo=lo, hi=hi)
-            .filter(F.col("ts") < F.lit(hi))
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                (
-                    F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
-                    .cast("double")
-                    / 10000
-                ).alias("sum_value"),
+        with phase("build"):
+            # sticky like catalog.table's conf pins: the driver's plain
+            # session writes INT96 timestamps by default, and INT96 carries
+            # no footer min/max — the stats index would silently go blind
+            # on ts (fail-open: correct, but nothing prunes)
+            spark.conf.set(
+                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
             )
-            .orderBy("event_type")
-        )
-        # materialize before the temp dir disappears
-        _stamp_plan("m07_stats_pruned_scan:serve", out)
-        rows = out.collect()
-        t_end = _time.perf_counter()
-        PHASE_TIMINGS["m07_stats_pruned_scan"] = {
-            "build_s": round(t_built - t_start, 3),
-            "serve_s": round(t_end - t_built, 3),
-        }
+            ev.select("event_type", "ts", "value").repartitionByRange(
+                8, "ts"
+            ).write.parquet(f"{work}/events")
+            lazy_stats = collect_file_stats(spark, f"{work}/events")
+            # materialize the index ONCE: collect_file_stats is a lazy
+            # mapInPandas plan, and every downstream action (the prune
+            # inside pruned_scan) would re-run the whole footer pass
+            # through fresh Python workers. The index is metadata-scale
+            # (#files × #cols rows) so a local copy is the honest analogue
+            # of persisting the stats table next to the data.
+            stat_rows = lazy_stats.collect()
+            stats = spark.createDataFrame(stat_rows, lazy_stats.schema)
+            # the zone maps already hold the global min(ts) — read it from
+            # the collected metadata rows (min over #files values) instead
+            # of paying a second full scan of events just to place the day
+            # window (footer min is the exact column min; ts canonicalizes
+            # to unix micros per collect_file_stats). Python min over the
+            # rows already on the driver: the Spark agg this replaces was
+            # a whole job dispatched against an 8-row local relation (the
+            # r10 m07 job-count wall, VERDICT r10 #3).
+            min_us = min(
+                int(r["min_v"])
+                for r in stat_rows
+                if r["column"] == "ts" and r["min_v"] is not None
+            )
+            min_ts = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=min_us)
+            lo = min_ts + dt.timedelta(days=1)
+            hi = min_ts + dt.timedelta(days=2)
+        with phase("serve"):
+            out = (
+                pruned_scan(spark, f"{work}/events", stats, "ts", lo=lo, hi=hi)
+                .filter(F.col("ts") < F.lit(hi))
+                .groupBy("event_type")
+                .agg(
+                    F.count("*").alias("n_events"),
+                    (
+                        F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
+                        .cast("double")
+                        / 10000
+                    ).alias("sum_value"),
+                )
+                .orderBy("event_type")
+            )
+            # materialize before the temp dir disappears
+            rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -247,39 +237,33 @@ def m10_hidden_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         PartitionField("user_bucket", "bucket", "user_id", 8),
     )
     work = tempfile.mkdtemp(prefix="m10_")
-    t_start = _time.perf_counter()
     try:
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        hidden_write(
-            ev.select("event_id", "ts", "user_id", "event_type", "value"),
-            f"{work}/events",
-            spec,
-        )
-        t_built = _time.perf_counter()  # hidden-partitioned table landed
-        out = (
-            hidden_scan(
-                spark,
+        with phase("build"):
+            spark.conf.set(
+                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+            )
+            hidden_write(
+                ev.select("event_id", "ts", "user_id", "event_type", "value"),
                 f"{work}/events",
                 spec,
-                eq={"user_id": first["u0"]},
-                between={"ts": (lo, hi)},
             )
-            .select(
-                "event_id",
-                "event_type",
-                F.round("value", 4).alias("value"),
+        with phase("serve"):
+            out = (
+                hidden_scan(
+                    spark,
+                    f"{work}/events",
+                    spec,
+                    eq={"user_id": first["u0"]},
+                    between={"ts": (lo, hi)},
+                )
+                .select(
+                    "event_id",
+                    "event_type",
+                    F.round("value", 4).alias("value"),
+                )
+                .orderBy("event_id")
             )
-            .orderBy("event_id")
-        )
-        _stamp_plan("m10_hidden_partition_scan:serve", out)
-        rows = out.collect()
-        t_end = _time.perf_counter()
-        PHASE_TIMINGS["m10_hidden_partition_scan"] = {
-            "build_s": round(t_built - t_start, 3),
-            "serve_s": round(t_end - t_built, 3),
-        }
+            rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -422,30 +406,24 @@ def m12_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(777).cast("long").alias("cents"),
     )
     work = tempfile.mkdtemp(prefix="m12_")
-    t_start = _time.perf_counter()
     try:
-        root = f"{work}/orders_v"
-        write_versioned(base.repartitionByRange(8, "id"), root)
-        merge_versioned(
-            spark, root, updates.unionAll(inserts), key="id"
-        )
-        t_built = _time.perf_counter()  # versioned publish + COW merge done
-        out = (
-            read_versioned(spark, root)
-            .groupBy((F.col("id") % 10).alias("bucket"))
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("cents").alias("total_cents"),
+        with phase("build"):
+            root = f"{work}/orders_v"
+            write_versioned(base.repartitionByRange(8, "id"), root)
+            merge_versioned(
+                spark, root, updates.unionAll(inserts), key="id"
             )
-            .orderBy("bucket")
-        )
-        _stamp_plan("m12_merge_cow:serve", out)
-        rows = out.collect()
-        t_end = _time.perf_counter()
-        PHASE_TIMINGS["m12_merge_cow"] = {
-            "build_s": round(t_built - t_start, 3),
-            "serve_s": round(t_end - t_built, 3),
-        }
+        with phase("serve"):
+            out = (
+                read_versioned(spark, root)
+                .groupBy((F.col("id") % 10).alias("bucket"))
+                .agg(
+                    F.count("*").alias("n"),
+                    F.sum("cents").alias("total_cents"),
+                )
+                .orderBy("bucket")
+            )
+            rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -530,29 +508,23 @@ def m13_vector_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="m13_")
-    t_start = _time.perf_counter()
     try:
-        eng = DataLakeEngine(spark, work)
-        eng.build_vector_index(emb, n_cells=_M13_CELLS)
-        t_built = _time.perf_counter()  # IVF index built + published
-        qrows = sorted(
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < _M13_NQ)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        out = eng.vector_search_batch(
-            [(qid, qv) for qid, qv in qrows],
-            k=_M13_TOPK,
-            nprobe=_M13_NPROBE,
-        ).select("query_id", "vec_id", "cid", "score", "rk")
-        _stamp_plan("m13_vector_index_search:serve", out)
-        rows = out.collect()  # materialize before the workdir vanishes
-        t_end = _time.perf_counter()
-        PHASE_TIMINGS["m13_vector_index_search"] = {
-            "build_s": round(t_built - t_start, 3),
-            "serve_s": round(t_end - t_built, 3),
-        }
+        with phase("build"):
+            eng = DataLakeEngine(spark, work)
+            eng.build_vector_index(emb, n_cells=_M13_CELLS)
+        with phase("serve"):
+            qrows = sorted(
+                (r["vec_id"], r["embedding"])
+                for r in emb.filter(F.col("vec_id") < _M13_NQ)
+                .select("vec_id", "embedding")
+                .collect()
+            )
+            out = eng.vector_search_batch(
+                [(qid, qv) for qid, qv in qrows],
+                k=_M13_TOPK,
+                nprobe=_M13_NPROBE,
+            ).select("query_id", "vec_id", "cid", "score", "rk")
+            rows = out.collect()  # materialize before the workdir vanishes
         return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -1026,3 +1026,21 @@ def test_index_entry_points_agree(spark, tmp_path, crashed_index_lake, entry):
         ids["vanished"]: ("gone", "ingested", False),
         ids["quarantined"]: ("t", "quarantined", False),
     }
+
+
+def test_meta_keeps_a_data_type_ending_in_old(engine):
+    """`.old` is not swap debris (swaps stage under an `_old.` prefix):
+    a data_type named `backup.old` reads back unchanged, and neither a
+    metadata read nor an index stamp's swap renames its partition."""
+    from pathlib import Path
+
+    engine.ingest_batch([{"a": 1}], data_type="backup.old")
+    meta = Path(engine.meta_path)
+    before = sorted(p.name for p in meta.iterdir())
+    assert "data_type=backup.old" in before
+    assert [r["data_type"] for r in engine.meta().collect()] == ["backup.old"]
+    assert sorted(p.name for p in meta.iterdir()) == before
+    engine.index_incremental()
+    rows = engine.meta().select("data_type", "indexed").collect()
+    assert [(r["data_type"], r["indexed"]) for r in rows] == [("backup.old", True)]
+    assert sorted(p.name for p in meta.iterdir()) == before

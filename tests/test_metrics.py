@@ -138,3 +138,194 @@ def test_uninstall_stops_recording_and_reinstall_is_single(spark, tmp_path):
     labeled = [r for r in rec._buffer if r["label"] == "reinstalled"]
     assert len(labeled) == 1  # exactly once — no stacked proxies
     rec.uninstall()
+
+
+def _recorded(rec, df, label):
+    rec.register_label(df, label)
+    received = len(df.collect())
+    assert rec.wait_for({label}, timeout_s=30.0)
+    (row,) = [r for r in rec._buffer if r["label"] == label]
+    return received, row
+
+
+def test_out_rows_is_rows_the_driver_received(spark, tmp_path):
+    """A top-k root merges per-partition results on the driver: below
+    it, `number of output rows` counts k rows from each of the 4
+    partitions (20), but the driver receives k. The collect-limit root
+    with an offset ships limit rows and drops the offset; a plain
+    collect's root count is already what the driver receives."""
+    from serverless_datalake_aws_spark.operators.metrics import MetricsRecorder
+
+    rec = MetricsRecorder(spark, str(tmp_path / "m")).install()
+    base = spark.range(0, 100, 1, 4)
+    try:
+        for label, df in (
+            ("topk", base.orderBy("id").limit(5)),
+            ("limit_offset", base.offset(2).limit(5)),
+            ("plain", base.filter("id % 3 = 0")),
+        ):
+            received, row = _recorded(rec, df, label)
+            assert row["out_rows"] == received, (label, row["out_rows"], received)
+    finally:
+        rec.uninstall()
+
+
+def test_window_returns_internal_leg_formatted_plan(spark):
+    """A query that materializes an internal leg and returns a local
+    relation: the window holds the leg's final formatted plan."""
+    from serverless_datalake_aws_spark.operators.metrics import WorkWindow
+
+    with WorkWindow(spark) as w:
+        rows = spark.range(3).groupBy().count().collect()
+        spark.createDataFrame(rows)
+    plans = w.plans()
+    assert len(plans) == 1
+    assert "Physical Plan" in plans[0]
+    assert "HashAggregate" in plans[0]
+
+
+def test_phase_outside_a_window_records_nothing(spark):
+    """phase() records only into the window open on the calling thread:
+    with none open it just runs the block."""
+    import threading
+
+    from serverless_datalake_aws_spark.operators.metrics import WorkWindow, phase
+
+    ran = []
+
+    def timed_block(tag):
+        with phase("build"):
+            ran.append(tag)
+
+    timed_block("no window")
+    with WorkWindow(spark) as w:
+        t = threading.Thread(target=timed_block, args=("other thread",))
+        t.start()
+        t.join(timeout=10)
+        assert not t.is_alive()
+    assert ran == ["no window", "other thread"] and w.phases == {}
+    with WorkWindow(spark) as w:
+        with phase("build"):
+            pass
+        with phase("serve"):
+            spark.range(3).collect()
+    assert set(w.phases) == {"build", "serve"}
+    assert w.phases["serve"] > 0
+
+
+def test_window_counts_equal_a_status_tracker_walk(spark):
+    from serverless_datalake_aws_spark.operators.metrics import WorkWindow
+
+    with WorkWindow(spark) as w:
+        spark.range(0, 20000, 1, 4).withColumn("k", F.col("id") % 13).groupBy(
+            "k"
+        ).count().collect()
+        spark.range(0, 10, 1, 1).collect()
+    work = w.work()
+    tracker = spark.sparkContext.statusTracker()
+    stages = set()
+    for j in range(w._jobs0, w._jobs1):
+        stages.update(tracker.getJobInfo(j).stageIds)
+    ran = [
+        st
+        for st in map(tracker.getStageInfo, stages)
+        if st.numCompletedTasks + st.numFailedTasks
+    ]
+    assert work["jobs"] == w._jobs1 - w._jobs0 >= 2
+    assert work["stages"] == len(ran) >= 3
+    assert work["tasks"] == sum(s.numCompletedTasks + s.numFailedTasks for s in ran)
+    assert work["single_task_stages"] == sum(s.numTasks == 1 for s in ran) >= 1
+
+
+def test_window_shuffle_bytes_equal_metrics_recorder(spark, tmp_path):
+    """One vocabulary: the window's shuffle_bytes for one shuffling
+    action is the recorder's shuffle_bytes for it."""
+    from serverless_datalake_aws_spark.operators.metrics import (
+        MetricsRecorder,
+        WorkWindow,
+    )
+
+    rec = MetricsRecorder(spark, str(tmp_path / "m")).install()
+    df = spark.range(0, 20000, 1, 8).groupBy((F.col("id") % 97).alias("k")).count()
+    try:
+        with WorkWindow(spark) as w:
+            _, row = _recorded(rec, df, "shuffling")
+    finally:
+        rec.uninstall()
+    assert row["shuffle_bytes"] > 0
+    assert w.work()["shuffle_bytes"] == row["shuffle_bytes"]
+
+
+def test_window_counts_foreach_batch_jobs(spark, tmp_path):
+    """index_cdc's micro-batch jobs run on the stream thread, under the
+    stream's `id/runId/batch` description: the window counts them."""
+    from serverless_datalake_aws_spark.operators.metrics import WorkWindow
+
+    eng = _engine(spark, tmp_path)
+    with WorkWindow(spark) as w:
+        eng.index_cdc()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    in_batch = [
+        j
+        for j in range(w._jobs0, w._jobs1)
+        if "batch = " in str(store.job(j).description())
+    ]
+    assert len(in_batch) > 0
+    assert w.work()["jobs"] >= len(in_batch)
+    assert eng.search(term="alpha").count() == 8  # the drain indexed
+
+
+_EVICTION_PROBE = """
+from pyspark.sql import SparkSession
+from serverless_datalake_aws_spark.operators.metrics import WorkWindow
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .config("spark.ui.retainedJobs", "5")
+    .config("spark.ui.retainedStages", "5")
+    .config("spark.sql.ui.retainedExecutions", "5")
+    .getOrCreate()
+)
+with WorkWindow(spark) as w:
+    for _ in range(30):
+        spark.range(3).collect()
+for read in (w.work, w.plans):
+    try:
+        read()
+        print("UNDERCOUNT", read.__name__)
+    except LookupError as exc:
+        print("EVICTED", read.__name__, exc)
+spark.stop()
+"""
+
+
+def test_window_raises_on_evicted_ids(tmp_path):
+    """Spark keeps only the newest spark.ui.retainedJobs/retainedStages
+    jobs/stages and spark.sql.ui.retainedExecutions executions (1000
+    each by default). A window reaching past them raises instead of
+    counting only what is left. Run in a child process: the retention
+    limits are fixed when a SparkContext starts."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _EVICTION_PROBE],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": os.pathsep.join(
+            [repo, os.environ.get("PYTHONPATH", "")])},
+    )
+    verdicts = [
+        ln.split()[:2]
+        for ln in out.stdout.splitlines()
+        if ln.startswith(("EVICTED", "UNDERCOUNT"))
+    ]
+    assert verdicts == [
+        ["EVICTED", "work"],
+        ["EVICTED", "plans"],
+    ], out.stdout + out.stderr[-2000:]

@@ -4,37 +4,38 @@
     python tools/capture_plans.py OUTDIR SUFFIX [SF_DIR] name [name ...]
 
 Writes OUTDIR/<name>_<SUFFIX>.txt containing the returned DataFrame's
-formatted physical plan. Queries that materialize internally (the
-registration-wall family, the st15/st20 ingest maintainers) return a
-driver-local relation; with SPARK_GRAFT_CAPTURE_PLANS=1 (set here) their
-internal legs stamp plans into plancap.CAPTURED, which this tool appends
-to the same file so the judge sees the plans that actually execute.
+formatted physical plan, then the final formatted plan of every SQL
+execution that building the query ran (a WorkWindow around the call).
+Queries that materialize internally (the registration-wall family, the
+st15/st20 ingest maintainers) return a driver-local relation, so those
+executed legs are the plans that actually cost time.
 
-SPARK_GRAFT_REPO selects which checkout's package to capture from
-(default: this script's repo) — used to produce the `_before.txt` files
-from a scratch worktree of the prior round's HEAD.
+To capture another checkout (the `_before.txt` files), run that
+checkout's copy of this script.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
-repo = os.environ.get("SPARK_GRAFT_REPO") or os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__))
-)
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo)
-os.environ["SPARK_GRAFT_CAPTURE_PLANS"] = "1"
 
+from serverless_datalake_aws_spark.operators.metrics import WorkWindow  # noqa: E402
 from serverless_datalake_aws_spark.plans import all_queries  # noqa: E402
 from serverless_datalake_aws_spark.session import get_session  # noqa: E402
 
-try:
-    from serverless_datalake_aws_spark import plancap  # noqa: E402
-except ImportError:  # pre-r11 checkout without the capture hook
-    plancap = None
+
+def query_plans(spark, query, sf_dir: str) -> tuple[str, list[str]]:
+    """Build `query` at sf_dir: its returned DataFrame's formatted plan
+    and the final plan of every SQL execution the build ran."""
+    with WorkWindow(spark) as window:
+        df = query(spark, sf_dir)
+    returned = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return returned, window.plans()
 
 
 def main() -> int:
@@ -48,20 +49,11 @@ def main() -> int:
     spark = get_session(app_name="capture_plans")
     qmap = all_queries()
     for name in names:
-        if plancap is not None:
-            plancap.CAPTURED.clear()
-        df = qmap[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        parts = [
-            f"# {name} @ {sf_dir} ({suffix}, repo={repo})",
-            "## declared query's returned DataFrame",
-            buf.getvalue(),
-        ]
-        for key in sorted(plancap.CAPTURED) if plancap is not None else []:
-            parts.append(f"## internal leg: {key}")
-            parts.append(plancap.CAPTURED[key])
+        returned, legs = query_plans(spark, qmap[name], sf_dir)
+        parts = [f"# {name} @ {sf_dir} ({suffix}, repo={repo})"]
+        parts += ["## declared query's returned DataFrame", returned]
+        for i, plan in enumerate(legs, 1):
+            parts += [f"## internal leg {i}: executed plan", plan]
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write("\n".join(parts))

@@ -17,23 +17,21 @@ sweep cheap) and counts plan nodes that matter at 100 TB:
           pandas-UDF seams only)
   PUSH = 1 when any scan carries PushedFilters beyond []
 
-Internal legs stamped via plancap (registration-wall serves, ingest
-history fetches) are audited too when present. One line per query +
-a tail summary of every query tripping a red flag.
+The final plan of every SQL execution that building the query ran
+(its `legs`: registration-wall builds and serves, ingest history
+fetches, writes; tools/capture_plans.query_plans) is audited too. One
+line per query + a tail summary of every query tripping a red flag.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CAPTURE_PLANS", "1")
 
-from serverless_datalake_aws_spark import plancap  # noqa: E402
+from capture_plans import query_plans  # noqa: E402
 from serverless_datalake_aws_spark.plans import all_queries  # noqa: E402
 from serverless_datalake_aws_spark.session import get_session  # noqa: E402
 
@@ -55,6 +53,26 @@ COUNTERS = (
     ),
 )
 
+def final_only(plan: str) -> str:
+    """`plan` without the details of nodes only Initial Plan trees show (an
+    executed adaptive plan prints its Final, then its Initial plan)."""
+    initial, final = set(), set()
+    trees: list[tuple[int, set]] = []  # open trees: (marker column, ids)
+    for line in plan.splitlines():
+        marker = re.search(r"\+- == (Initial|Final) Plan ==", line)
+        col = marker.start() if marker else len(line) - len(line.lstrip(" :|+-"))
+        while trees and (not line.strip() or col <= trees[-1][0]):
+            trees.pop()
+        if marker:
+            trees.append((col, initial if marker.group(1) == "Initial" else final))
+        elif trees and (node := re.search(r"\((\d+)\)", line)):
+            trees[-1][1].add(node.group(1))
+
+    def keep(m: re.Match) -> str:
+        return "" if m.group(1) in initial - final else m.group(0)
+
+    return re.sub(r"^\((\d+)\) .*?\n\n", keep, plan, flags=re.M | re.S)
+
 
 def main() -> int:
     rest = sys.argv[1:]
@@ -73,14 +91,9 @@ def main() -> int:
     hdr = "name\t" + "\t".join(k for k, _ in COUNTERS) + "\tPUSH\tlegs"
     print(hdr, flush=True)
     for name in names:
-        plancap.CAPTURED.clear()
         try:
-            df = qmap[name](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            texts = [buf.getvalue()] + list(plancap.CAPTURED.values())
-            legs = len(plancap.CAPTURED)
+            returned, legs = query_plans(spark, qmap[name], sf_dir)
+            texts = [returned] + [final_only(p) for p in legs]
         except Exception as exc:  # noqa: BLE001 — audit must finish
             print(f"{name}\tERR {type(exc).__name__}: {exc}"[:160], flush=True)
             flagged.append(f"{name} ERR")
@@ -100,7 +113,7 @@ def main() -> int:
             name
             + "\t"
             + "\t".join(str(counts[k]) for k, _ in COUNTERS)
-            + f"\t{push}\t{legs}"
+            + f"\t{push}\t{len(legs)}"
         )
         print(row, flush=True)
         if counts["CART"] or counts["PYROW"]:
