@@ -25,6 +25,19 @@ reference never exploited. Ingest is batch-first (`ingest_batch`): the
 reference's one-object-per-record writes are its #1 scaling flaw at
 100 TB (small-file problem), so the single-record `ingest()` is sugar
 over the batched path.
+
+Ingest→searchable takes a fixed number of Spark jobs, like the
+reference's three calls (one S3 put, one DynamoDB put_item, one
+update_item). An `ingest_batch` call's records are a driver-side list
+bound for one (data_type, ingest_date) partition, so its raw, `_meta`,
+`_changelog` and `_lineage` appends are written from the driver in
+Spark's own file format (`sources.writers.append_rows`): no job, one
+extra job when `validate` rules are evaluated. `index_cdc` collects each
+micro-batch's (id, data_type, location) rows once and finds the ids to
+append and to stamp in one action over only the partitions the batch
+touched; the tokenizing append and the `_meta` copy-on-write stamp are
+the remaining jobs. The stamp rewrites whole `data_type` partitions, so
+it is the step whose cost still grows with the lake.
 """
 
 from __future__ import annotations
@@ -43,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from serverless_datalake_aws_spark.sources.readers import is_missing_path
+from serverless_datalake_aws_spark.sources.writers import append_rows, partition_dir
 from serverless_datalake_aws_spark.streaming.pipeline import drain
 
 META_SCHEMA = T.StructType(
@@ -94,39 +108,73 @@ def _failed_rules_expr(validate: list[tuple[str, str]]):
     )
 
 
+def _meta_row_schema(rows: list[dict]) -> T.StructType:
+    """The file schema of the `_meta` / `_changelog` rows `_meta_rows`
+    built for one append — the nullability Spark's writer derived from
+    the expressions that filled them: `indexed` is always set (False),
+    and `tags` / `description` are non-null when no row of the append
+    holds a null there (a caller's literal, a rule list)."""
+    filled = {c for c in ("tags", "description") if all(r[c] is not None for r in rows)}
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                f.dataType,
+                f.nullable and f.name != "indexed" and f.name not in filled,
+            )
+            for f in META_SCHEMA
+        ]
+    )
+
+QUARANTINE_SCHEMA = T.StructType(
+    RECORD_SCHEMA.fields
+    + [T.StructField("failed_rules", T.ArrayType(T.StringType()), False)]
+)
+
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("op", T.StringType()),
+        T.StructField("src", T.StringType()),
+        T.StructField("dst", T.StringType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("at", T.TimestampType()),
+    ]
+)
+
+
 def _meta_rows(
-    records: DataFrame,
+    records: list[dict],
     now: datetime,
     zone_root: str,
     source: str,
     owner: str,
     status: str,
-    tags: Column,
-    description: Column,
-) -> DataFrame:
-    """One unindexed `_meta` row per record, in META_SCHEMA order — the
-    single row shape of ingest-data-lambda.py:65-97. `records` carries
+    tags,
+    description,
+) -> list[dict]:
+    """One unindexed `_meta` row per record, keyed by META_SCHEMA — the
+    single row shape of ingest-data-lambda.py:65-97. `records` carry
     id / payload / data_type / ingest_date; `zone_root` is the records
-    directory the `location` column points into."""
-    return records.select(
-        "id",
-        F.lit(now).alias("timestamp"),
-        "data_type",
-        F.lit(source).alias("source"),
-        F.lit(owner).alias("owner"),
-        F.concat(
-            F.lit(f"{zone_root}/data_type="),
-            "data_type",
-            F.lit("/ingest_date="),
-            "ingest_date",
-        ).alias("location"),
-        F.octet_length("payload").cast("long").alias("size_bytes"),
-        F.lit(status).alias("status"),
-        tags.alias("tags"),
-        description.alias("description"),
-        F.lit(False).alias("indexed"),
-        F.lit(None).cast("timestamp").alias("indexed_at"),
-    )
+    directory the `location` column points into; `tags` and
+    `description` map a record to its value."""
+    return [
+        {
+            "id": r["id"],
+            "timestamp": now,
+            "data_type": r["data_type"],
+            "source": source,
+            "owner": owner,
+            "location": f"{zone_root}/data_type={r['data_type']}"
+            f"/ingest_date={r['ingest_date']}",
+            "size_bytes": len(r["payload"].encode("utf-8")),
+            "status": status,
+            "tags": tags(r),
+            "description": description(r),
+            "indexed": False,
+            "indexed_at": None,
+        }
+        for r in records
+    ]
 
 
 def _unindexed() -> Column:
@@ -136,6 +184,18 @@ def _unindexed() -> Column:
     as searchable."""
     return ~F.coalesce("indexed", F.lit(False)) & (
         F.coalesce("status", F.lit("")) != "quarantined"
+    )
+
+
+def _id_frame(spark: SparkSession, ids) -> DataFrame:
+    """`ids` as a broadcast one-column local relation (built from an
+    arrow table, so no job runs to ship it): semi-joined against a
+    scan, it keeps an id set of any size out of the plan text, where an
+    `isin` literal list would sit."""
+    import pyarrow as pa
+
+    return F.broadcast(
+        spark.createDataFrame(pa.table({"id": pa.array(list(ids), pa.string())}))
     )
 
 
@@ -331,73 +391,87 @@ class DataLakeEngine:
         a `_meta` row with status='quarantined' (audit trail), and are
         excluded from the raw zone, the change feed, and therefore the
         search index and downstream curation. Returns the ids of the
-        ACCEPTED records only. All rules ride one filter pass over the
-        batch — no extra scans."""
+        ACCEPTED records only. All rules ride one collect of the batch
+        (the only Spark job of a validated call).
+
+        The records are already a driver-side list and always land in
+        one (data_type, ingest_date) partition, so every table is
+        appended from the driver (`sources.writers.append_rows`): no
+        Spark job, Spark's own file format, each file published by a
+        rename. Remote roots keep Spark's writer."""
         now = datetime.now(timezone.utc)
         ingest_date = now.strftime("%Y-%m-%d")
         rows = [
-            (str(uuid.uuid4()), json.dumps(rec), data_type, ingest_date)
+            {
+                "id": str(uuid.uuid4()),
+                "payload": json.dumps(rec),
+                "data_type": data_type,
+                "ingest_date": ingest_date,
+            }
             for rec in records
         ]
-        df = self.spark.createDataFrame(rows, RECORD_SCHEMA)
         raw_root = self.zone("raw")
-        quarantined_ids: list[str] = []
-        if validate:
-            tagged = df.withColumn("failed_rules", _failed_rules_expr(validate))
-            bad = tagged.filter(F.size("failed_rules") > 0)
-            bad_rows = bad.select("id").collect()
-            quarantined_ids = [r["id"] for r in bad_rows]
+        failed: dict[str, list[str]] = {}
+        if validate and rows:
+            failed = {
+                r["id"]: r["failed_rules"]
+                for r in self.spark.createDataFrame(rows, RECORD_SCHEMA)
+                .select("id", _failed_rules_expr(validate).alias("failed_rules"))
+                .filter(F.size("failed_rules") > 0)
+                .collect()
+            }
+        if failed:
             # quarantine write first so a crash between the two writes
-            # can only lose bad rows to re-ingest, never double-accept —
-            # but ONLY when something actually failed: an unconditional
-            # append materializes an EMPTY quarantine dir (just
-            # _SUCCESS), after which every schema-less quarantine()/
-            # requeue read crashes with UNABLE_TO_INFER_SCHEMA
-            if quarantined_ids:
-                bad.write.mode("append").partitionBy(
-                    "data_type", "ingest_date"
-                ).parquet(f"{self.root}/quarantine/records")
-            df = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
-            if quarantined_ids:
-                # failed rules ride tags (already array<string>; a
-                # join/split round-trip would corrupt rule names
-                # containing a comma)
-                qmeta = _meta_rows(
-                    bad, now, f"{self.root}/quarantine/records",
-                    source, owner, "quarantined",
-                    F.col("failed_rules"), F.lit("failed ingest validation"),
-                )
-                qmeta.write.mode("append").partitionBy("data_type").parquet(
-                    self.meta_path
-                )
-                self._log_lineage(
-                    "quarantine",
-                    source,
-                    f"{self.root}/quarantine/records",
-                    len(quarantined_ids),
-                )
-        df.write.mode("append").partitionBy("data_type", "ingest_date").parquet(
-            f"{raw_root}/records"
+            # can only lose bad rows to re-ingest, never double-accept.
+            # Nothing is written when nothing failed: an empty
+            # quarantine dir breaks every schema-less quarantine()/
+            # requeue read with UNABLE_TO_INFER_SCHEMA.
+            qroot = f"{self.root}/quarantine/records"
+            bad = [
+                dict(r, failed_rules=failed[r["id"]]) for r in rows if r["id"] in failed
+            ]
+            append_rows(
+                self.spark, qroot, bad, QUARANTINE_SCHEMA, ("data_type", "ingest_date")
+            )
+            # failed rules ride tags (already array<string>; a
+            # join/split round-trip would corrupt rule names
+            # containing a comma)
+            qmeta = _meta_rows(
+                bad, now, qroot, source, owner, "quarantined",
+                lambda r: r["failed_rules"], lambda r: "failed ingest validation",
+            )
+            append_rows(
+                self.spark, self.meta_path, qmeta, _meta_row_schema(qmeta), ("data_type",)
+            )
+            self._log_lineage("quarantine", source, qroot, len(bad))
+            rows = [r for r in rows if r["id"] not in failed]
+        # an append into a raw/records that an interrupted dedup_zone
+        # publish renamed away would start a fresh directory and hide
+        # the staged copy from every later recovery: roll it forward
+        self._recover_zone_swap("raw")
+        append_rows(
+            self.spark, f"{raw_root}/records", rows, RECORD_SCHEMA,
+            ("data_type", "ingest_date"),
         )
+        meta_tags = None if tags is None else [str(t) for t in tags]
+        meta_desc = None if description is None else str(description)
         meta_rows = _meta_rows(
-            df, now, f"{raw_root}/records",
-            source, owner, "ingested",
-            F.lit(tags).cast("array<string>"), F.lit(description).cast("string"),
+            rows, now, f"{raw_root}/records", source, owner, "ingested",
+            lambda r: meta_tags, lambda r: meta_desc,
         )
         # _meta is hive-partitioned by data_type: metadata searches by
         # type prune partitions, and the K7 upsert (_mark_indexed) can
         # swap only affected partitions instead of the whole table.
-        meta_rows.write.mode("append").partitionBy("data_type").parquet(
-            self.meta_path
+        meta_schema = _meta_row_schema(meta_rows)
+        append_rows(
+            self.spark, self.meta_path, meta_rows, meta_schema, ("data_type",)
         )
         # Append-only change feed (S11): the stand-in for the
         # reference's DynamoDB stream (index-data-lambda.py:51-65).
         # index_cdc() consumes it as a checkpointed file stream.
-        meta_rows.write.mode("append").parquet(self.changelog_path)
-        quarantined = set(quarantined_ids)
-        accepted = [r[0] for r in rows if r[0] not in quarantined]
-        self._log_lineage("ingest", source, f"{raw_root}/records", len(accepted))
-        return accepted
+        append_rows(self.spark, self.changelog_path, meta_rows, meta_schema)
+        self._log_lineage("ingest", source, f"{raw_root}/records", len(rows))
+        return [r["id"] for r in rows]
 
     def quarantine(self) -> DataFrame:
         """Rows rejected by ingest validation, with their failed_rules —
@@ -480,50 +554,54 @@ class DataLakeEngine:
             # a crash-retry recomputes the identical rows and the per-sink
             # anti-joins below make each write idempotent (no uuid() /
             # localCheckpoint pinning needed)
-            fresh = passing.select(
-                F.md5(F.concat(F.lit("requeue:"), F.col("id"))).alias("id"),
-                "payload",
-                "data_type",
-                "ingest_date",
-                F.col("id").alias("orig_id"),
-            )
-            n = fresh.count()
+            # one collect: the passers are DLQ-sized by design
+            fresh = [
+                r.asDict()
+                for r in passing.select(
+                    F.md5(F.concat(F.lit("requeue:"), F.col("id"))).alias("id"),
+                    "payload",
+                    "data_type",
+                    "ingest_date",
+                    F.col("id").alias("orig_id"),
+                ).collect()
+            ]
+            n = len(fresh)
             if n:
                 raw_root = self.zone("raw")
-                parts = [
-                    (r["data_type"], r["ingest_date"])
-                    for r in fresh.select("data_type", "ingest_date").distinct().collect()
-                ]
-                part_pred = None
-                for dt, d in parts:
-                    one = (F.col("data_type") == dt) & (F.col("ingest_date") == d)
-                    part_pred = one if part_pred is None else (part_pred | one)
-                existing_raw = (
-                    # explicit schema: an all-quarantined first ingest
-                    # leaves raw/records with only _SUCCESS, and a
-                    # schema-less read of it raises
-                    # UNABLE_TO_INFER_SCHEMA instead of "no dupes"
-                    self.spark.read.schema(RECORD_SCHEMA).parquet(
-                        f"{raw_root}/records"
-                    )
-                    .filter(part_pred)  # partition-pruned: DLQ-sized dirs only
-                    .select("id")
+                self._recover_zone_swap("raw")  # see _index_append
+                raw = self._read_partitions(
+                    f"{raw_root}/records",
+                    RECORD_SCHEMA,
+                    {
+                        (("data_type", r["data_type"]), ("ingest_date", r["ingest_date"]))
+                        for r in fresh
+                    },
                 )
-                fresh.drop("orig_id").join(
-                    existing_raw, "id", "left_anti"
-                ).write.mode("append").partitionBy(
-                    "data_type", "ingest_date"
-                ).parquet(f"{raw_root}/records")
+                existing = set() if raw is None else {
+                    r["id"]
+                    for r in raw.join(
+                        _id_frame(self.spark, [r["id"] for r in fresh]), "id", "left_semi"
+                    )
+                    .select("id")
+                    .collect()
+                }
+                append_rows(
+                    self.spark,
+                    f"{raw_root}/records",
+                    [r for r in fresh if r["id"] not in existing],
+                    RECORD_SCHEMA,
+                    ("data_type", "ingest_date"),
+                )
                 meta_rows = _meta_rows(
                     fresh, now, f"{raw_root}/records",
                     "requeue", "system", "ingested",
-                    F.lit(None).cast("array<string>"),
-                    F.concat(F.lit("requeued from "), "orig_id"),
+                    lambda r: None, lambda r: f"requeued from {r['orig_id']}",
                 )
-                meta_rows.write.mode("append").partitionBy("data_type").parquet(
-                    self.meta_path
+                meta_schema = _meta_row_schema(meta_rows)
+                append_rows(
+                    self.spark, self.meta_path, meta_rows, meta_schema, ("data_type",)
                 )
-                meta_rows.write.mode("append").parquet(self.changelog_path)
+                append_rows(self.spark, self.changelog_path, meta_rows, meta_schema)
                 self._log_lineage(
                     "requeue", str(qpath), f"{raw_root}/records", n
                 )
@@ -594,8 +672,10 @@ class DataLakeEngine:
         leaves no records dir but a COMPLETE staged copy in `.dedup.tmp`
         (staging always finishes before the swap starts) — roll
         forward; with only `.dedup.old` present, roll back. Runs at
-        every records() read and at dedup_zone() entry, under the zone
-        lock so it cannot race a live swap. No-op when the dir exists."""
+        every records() read, at dedup_zone() entry and before the raw
+        zone is read or appended by ingest, indexing and requeue, under
+        the zone lock so it cannot race a live swap. No-op when the dir
+        exists."""
         if self.is_remote:
             return
         path = Path(f"{self.zone(zone)}/records")
@@ -1053,15 +1133,12 @@ class DataLakeEngine:
         """The operational metrics table (flushes pending rows first).
         Empty — nothing recorded yet — is a valid dashboard answer,
         not a missing-path crash (mirrors stream_metrics)."""
+        from serverless_datalake_aws_spark.operators.metrics import METRICS_SCHEMA
+
         rec = self.enable_metrics()
         rec.flush()
         if not Path(self.metrics_path).exists():
-            return self.spark.createDataFrame(
-                [],
-                "ts timestamp, func_name string, fingerprint long, "
-                "label string, plan string, wall_ms double, "
-                "out_rows long, shuffle_bytes long",
-            )
+            return self.spark.createDataFrame([], METRICS_SCHEMA)
         return self.spark.read.parquet(self.metrics_path)
 
     # -- streaming telemetry (per-micro-batch CloudWatch parity) -----------
@@ -1123,11 +1200,10 @@ class DataLakeEngine:
         """Append one provenance event — (op, src, dst, rows, ts) —
         to the `_lineage` table. Append-only, |ops| rows, never read on
         a hot path; the audit surface Glue Data Catalog + CloudTrail
-        give an S3 lake, as a queryable table."""
-        self.spark.createDataFrame(
-            [(op, src, dst, int(n_rows), datetime.now(timezone.utc))],
-            "op string, src string, dst string, n_rows long, at timestamp",
-        ).write.mode("append").parquet(self.lineage_path)
+        give an S3 lake, as a queryable table. Driver-side, no job."""
+        at = datetime.now(timezone.utc)
+        event = {"op": op, "src": src, "dst": dst, "n_rows": int(n_rows), "at": at}
+        append_rows(self.spark, self.lineage_path, [event], LINEAGE_SCHEMA)
 
     def lineage(self) -> DataFrame:
         """The provenance event log (one row per lake operation)."""
@@ -1965,7 +2041,9 @@ class DataLakeEngine:
         rows = ids.select("id").distinct().collect()
         return self.spark.createDataFrame(rows, "id string")
 
-    def _mark_indexed(self, ids: DataFrame | None = None) -> None:
+    def _mark_indexed(
+        self, ids: DataFrame | None = None, data_types: list[str] | None = None
+    ) -> None:
         """Metadata upsert (K7): stamp indexed=true for exactly the ids
         just indexed — same last-writer-wins semantics as the reference's
         per-attribute DynamoDB updates (index-data-lambda.py:165-172).
@@ -1975,7 +2053,9 @@ class DataLakeEngine:
         the rewrite goes to a tmp dir first, then swaps — the source is
         never deleted while a task could still be reading it. With no
         `ids`, all currently-unindexed rows are stamped (the full-rebuild
-        path after _rebuild_search_index).
+        path after _rebuild_search_index). `data_types`, when the caller
+        knows them, are the partitions to rewrite; otherwise they are
+        collected from the ids' `_meta` rows.
 
         Multi-writer safety (round 5): the whole read-compute-swap runs
         under an exclusive commit lock (sources/commitlog.FileLock), so
@@ -1985,27 +2065,31 @@ class DataLakeEngine:
         object-store/remote branch keeps dynamic-partition-overwrite and
         documents S3 conditional-PUT / Delta OCC as its lock analogue."""
         if self.is_remote:
-            self._mark_indexed_inner(ids)
+            self._mark_indexed_inner(ids, data_types)
             return
         from serverless_datalake_aws_spark.sources.commitlog import FileLock
 
         with FileLock(self.meta_path + ".lock") as lk:
-            self._mark_indexed_inner(ids, lock=lk)
+            self._mark_indexed_inner(ids, data_types, lock=lk)
 
-    def _mark_indexed_inner(self, ids: DataFrame | None = None, lock=None) -> None:
+    def _mark_indexed_inner(
+        self, ids: DataFrame | None, data_types: list[str] | None, lock=None
+    ) -> None:
         meta = self.meta()
         if ids is None:
             ids = meta.filter(_unindexed()).select("id")
         hit_ids = F.broadcast(
             ids.select("id").distinct().withColumn("_hit", F.lit(True))
         )
-        affected = [
-            r[0]
-            for r in meta.join(hit_ids, "id", "left_semi")
-            .select("data_type")
-            .distinct()
-            .collect()
-        ]
+        affected = data_types
+        if affected is None:
+            affected = [
+                r[0]
+                for r in meta.join(hit_ids, "id", "left_semi")
+                .select("data_type")
+                .distinct()
+                .collect()
+            ]
         if not affected:
             return
         stamped = (
@@ -2145,77 +2229,107 @@ class DataLakeEngine:
         )
         return self.search_index()
 
-    def _index_append(self, ids: DataFrame) -> int:
+    def _fs_path(self, path: str):
+        """(Hadoop FileSystem, Path) of a lake path, local or remote."""
+        hp = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return hp.getFileSystem(self.spark._jsc.hadoopConfiguration()), hp
+
+    def _read_partitions(
+        self, base: str, schema: T.StructType, parts: set[tuple]
+    ) -> DataFrame | None:
+        """Read only the partition directories `parts` (tuples of
+        (column, value) pairs) of the table at `base` — a listing that
+        grows with the caller's batch, not with the table. Missing
+        directories are skipped; None when none exists."""
+        dirs = []
+        for part in sorted(parts):
+            d = "/".join([base, *(partition_dir(self.spark, c, v) for c, v in part)])
+            fs, hp = self._fs_path(d)
+            if fs.exists(hp):
+                dirs.append(d)
+        if not dirs:
+            return None
+        return self.spark.read.schema(schema).option("basePath", base).parquet(*dirs)
+
+    def _index_append(self, batch: list) -> int:
         """The one append-and-stamp step behind `index_incremental` and
         `index_cdc` — the reference's single `index_in_elasticsearch`
-        (index-data-lambda.py:390-411). Tokenizes and appends the raw
-        records of `ids` not yet in the index, then stamps what is
-        searchable. Returns the number of ids stamped."""
+        (index-data-lambda.py:390-411). `batch` is pinned driver-side
+        `(id, data_type, location)` rows. Tokenizes and appends the raw
+        records of the batch not yet in the index, then stamps what is
+        searchable. Returns the number of ids stamped.
+
+        One action finds both sets, reading only the batch's data_type
+        partitions of the index and its (data_type, ingest_date)
+        partitions of raw, semi-joined against the batch's ids; it
+        returns one row per batch id found, in raw or in the index."""
+        rows = {r["id"]: r for r in batch}
+        if not rows:
+            return 0
+        # roll an interrupted dedup_zone publish forward (or wait out a
+        # live one) first: with raw/records renamed away, the partition
+        # read below would see no record and drop the batch for good
+        self._recover_zone_swap("raw")
+        # (data_type, ingest_date) of each record, from its location
+        parts = {
+            (r["data_type"], r["location"].rsplit("/ingest_date=", 1)[1])
+            for r in rows.values()
+        }
+        raw = self._read_partitions(
+            f"{self.zone('raw')}/records",
+            RECORD_SCHEMA,
+            {(("data_type", dt), ("ingest_date", d)) for dt, d in parts},
+        )
+        index = self._read_partitions(
+            self.search_index_path,
+            T.StructType(
+                [T.StructField("id", T.StringType()), T.StructField("data_type", T.StringType())]
+            ),
+            {(("data_type", dt),) for dt, _ in parts},
+        )
         # content-keyed idempotence: a writer can die between the index
         # append and the stamp, and foreachBatch side effects are
         # at-least-once, so an id already carrying index tokens is never
-        # appended again (column-pruned anti-join on the index's id
-        # column) but is still stamped — it converges to indexed=true
-        try:
-            already = (
-                self.spark.read.parquet(self.search_index_path)
-                .select("id")
-                .distinct()
+        # appended again but is still stamped — it converges to
+        # indexed=true. Both sets are pinned BEFORE the append: the
+        # parquet relation re-lists files at action time.
+        batch_ids = _id_frame(self.spark, rows)
+        sides = [
+            df.join(batch_ids, "id", "left_semi").select(
+                "id", F.lit(in_index).alias("hit")
             )
-        except AnalysisException as e:
-            if not is_missing_path(e):
-                raise
-            already = None
-        to_append = ids if already is None else ids.join(already, "id", "left_anti")
-        # pin the converged set BEFORE the append: the parquet relation
-        # re-lists files at action time, so evaluating ids∩already after
-        # the append would sweep the freshly-appended ids in and
-        # double-count them
-        converged_rows = (
-            []
-            if already is None
-            else ids.join(already, "id", "left_semi")
-            .select("id")
-            .distinct()
-            .collect()
-        )
-        # persist so the id collect and the token append read the SAME
-        # raw pass (the add_to_vector_index convention)
-        new_id_rows: list = []
-        try:
-            new_recs = self.records("raw").join(
-                F.broadcast(to_append), "id", "left_semi"
-            ).persist()
-            try:
-                new_id_rows = new_recs.select("id").distinct().collect()
-                if new_id_rows:
-                    # guard the append on non-empty: an unconditional
-                    # empty append materializes a schema-less
-                    # (_SUCCESS-only) index dir that breaks every later
-                    # schema-inferring read with UNABLE_TO_INFER_SCHEMA
-                    # (the quarantine-dir bug, same class)
-                    self._tokenize(new_recs).write.mode(
-                        "append"
-                    ).partitionBy("data_type").parquet(
-                        self.search_index_path
-                    )
-            finally:
-                new_recs.unpersist()
-        except AnalysisException as e:
-            if not is_missing_path(e):
-                raise
-            # raw zone fully expired/absent: nothing is appendable
+            for df, in_index in ((index, True), (raw, False))
+            if df is not None
+        ]
+        found: dict[str, bool] = {}
+        if sides:
+            union = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+            # one row per id: a redelivered batch's postings collapse
+            # map-side instead of reaching the driver one per token
+            found = dict(union.groupBy("id").agg(F.max("hit")).collect())
+        new_ids = [i for i, in_index in found.items() if not in_index]
+        if new_ids:
+            # guard the append on non-empty: an unconditional empty
+            # append materializes a schema-less (_SUCCESS-only) index
+            # dir that breaks every later schema-inferring read with
+            # UNABLE_TO_INFER_SCHEMA (the quarantine-dir bug, same class)
+            self._tokenize(
+                raw.join(_id_frame(self.spark, new_ids), "id", "left_semi")
+            ).write.mode("append").partitionBy("data_type").parquet(
+                self.search_index_path
+            )
         # The index_incremental invariant: stamp only ids that are
         # actually SEARCHABLE — the ones whose tokens just landed plus
         # the converged set. An id whose raw record no longer exists
         # (expire() keeps _meta and the changelog as the audit trail)
         # appends zero tokens and must stay indexed=false; stamping it
         # would assert searchability for a tokenless record, forever.
-        stampable = self.spark.createDataFrame(
-            new_id_rows + converged_rows, "id string"
-        )
-        self._mark_indexed(stampable)
-        return len(new_id_rows) + len(converged_rows)
+        if found:
+            self._mark_indexed(
+                _id_frame(self.spark, found),
+                sorted({rows[i]["data_type"] for i in found}),
+            )
+        return len(found)
 
     def index_incremental(self) -> int:
         """Incremental indexing (K9/X3 single-doc path, batched): only
@@ -2226,15 +2340,18 @@ class DataLakeEngine:
         `index_cdc`. Returns the number of newly indexed records:
         pending ids whose raw record vanished are never stamped, so a
         poll-until-zero caller terminates."""
-        # PIN the id snapshot: append and stamp must act on the SAME
-        # set — a lazy plan re-evaluated at stamp time would sweep rows
-        # ingested in between into the stamp with no tokens written
-        # (invisible to search forever). _pin_ids, not localCheckpoint:
-        # checkpoint blocks are never reclaimed in-session.
-        pending = self._pin_ids(self.meta().filter(_unindexed()))
-        if pending.count() == 0:
-            return 0
-        return self._index_append(pending)
+        # PIN the pending rows driver-side: append and stamp must act on
+        # the SAME set — a lazy plan re-evaluated at stamp time would
+        # sweep rows ingested in between into the stamp with no tokens
+        # written (invisible to search forever). A collect, not
+        # localCheckpoint: checkpoint blocks are never reclaimed
+        # in-session. Pending sets are metadata-scale by design.
+        return self._index_append(
+            self.meta()
+            .filter(_unindexed())
+            .select("id", "data_type", "location")
+            .collect()
+        )
 
     def index_cdc(self, timeout_s: int = 600, trigger: dict | None = None):
         """True CDC indexing (S11): a checkpointed file stream over the
@@ -2244,9 +2361,11 @@ class DataLakeEngine:
         instead of at-least-once Lambda retries.
 
         Each micro-batch carries only the metadata rows appended since
-        the last run (checkpoint tracks consumed files); its ids go
-        through the same append-and-stamp step as `index_incremental`
-        (`_index_append`) — no full rebuild, no full-meta scan.
+        the last run (checkpoint tracks consumed files). It is read
+        once: one collect pins its (id, data_type, location) rows, which
+        go through the same append-and-stamp step as
+        `index_incremental` (`_index_append`) — no full rebuild, no
+        full-meta scan, no read of a partition the batch did not touch.
 
         `trigger` defaults to `{"availableNow": True}`: drain-then-stop
         (returns None after the drain completes). Pass
@@ -2256,12 +2375,17 @@ class DataLakeEngine:
         they land until .stop(); the StreamingQuery is returned so the
         caller owns its lifecycle. Checkpoint and idempotence contract
         are identical in both modes."""
+        # an all-quarantined first ingest appends nothing to the feed
+        fs, feed = self._fs_path(self.changelog_path)
+        fs.mkdirs(feed)
         stream = self.spark.readStream.schema(META_SCHEMA).parquet(
             self.changelog_path
         )
 
         def _handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self._index_append(batch_df.select("id").distinct())
+            self._index_append(
+                batch_df.select("id", "data_type", "location").collect()
+            )
 
         if trigger is None:
             trigger = {"availableNow": True}
@@ -2484,34 +2608,27 @@ class DataLakeEngine:
         assigned = VX.nearest_centroid(src, cent_rows)
         assigned.write.partitionBy("cid").parquet(f"{staging}/cells")
         # the codebook is n_cells driver-local rows bound for a LOCAL
-        # path (remote roots are rejected above): write it with pyarrow
-        # directly instead of dispatching a Spark job. r11 already cut
-        # this from a ~32-slice pickle replay to a one-slice
-        # parallelize (~0.4 s); the remaining cost was pure job
-        # dispatch (~0.35 s for 8 rows — r12 m13 build profile).
-        # int64 + list<float32> reads back as (cid long, embedding
-        # array<float>), the exact schema the Spark write produced.
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(f"{staging}/codebook", exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "cid": pa.array(
-                        [c for c, _ in cent_rows], type=pa.int64()
-                    ),
-                    "embedding": pa.array(
-                        [e for _, e in cent_rows],
-                        type=pa.list_(pa.float32()),
-                    ),
-                }
+        # path (remote roots are rejected above): the driver-side
+        # appender writes it without dispatching a Spark job (the job
+        # was pure dispatch cost, ~0.35 s for 8 rows — r12 m13 build
+        # profile), in the (cid long, embedding array<float>) schema
+        # the Spark write produced.
+        append_rows(
+            self.spark,
+            f"{staging}/codebook",
+            [{"cid": c, "embedding": e} for c, e in cent_rows],
+            T.StructType(
+                [
+                    T.StructField("cid", T.LongType()),
+                    T.StructField("embedding", T.ArrayType(T.FloatType())),
+                ]
             ),
-            f"{staging}/codebook/part-00000.parquet",
         )
         # row count for lineage: sum the cells' parquet footers driver-
         # side (metadata-only, the same numbers a Spark count() job
         # reads — minus the job; ~0.2-0.6 s per build at the fixture)
+        import pyarrow.parquet as pq
+
         from serverless_datalake_aws_spark.sources.stats import (
             list_parquet_files,
         )

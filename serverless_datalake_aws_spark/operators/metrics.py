@@ -41,50 +41,45 @@ plans); `phase(name)` times a block into the window open on its thread.
 from __future__ import annotations
 
 import contextlib
-import os
 import threading
 import time
-import uuid
 from collections import defaultdict
 from datetime import datetime, timezone
 
-METRIC_COLUMNS = (
-    "ts",
-    "func_name",
-    "fingerprint",
-    "label",
-    "plan",
-    "wall_ms",
-    "out_rows",
-    "shuffle_bytes",
+from pyspark.sql import types as T
+
+METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("func_name", T.StringType()),
+        T.StructField("fingerprint", T.LongType()),
+        T.StructField("label", T.StringType()),
+        T.StructField("plan", T.StringType()),
+        T.StructField("wall_ms", T.DoubleType()),
+        T.StructField("out_rows", T.LongType()),
+        T.StructField("shuffle_bytes", T.LongType()),
+    ]
 )
 
 
 def flush_rows(path: str, rows: list[dict], schema) -> int:
-    """Shared telemetry export: write `rows` as one uuid-named parquet
-    part file under `path` via pyarrow directly (an exporter must not
-    run Spark jobs — a batch listener would re-enter itself). Used by
-    both the batch recorder here and the streaming recorder
-    (streaming/observability.py).
+    """Shared telemetry export: append `rows` to the feed at `path` via
+    the driver-side appender (`sources.writers.append_rows` — an
+    exporter must not run Spark jobs, a batch listener would re-enter
+    itself). Used by both the batch recorder here and the streaming
+    recorder (streaming/observability.py).
 
     The write holds the feed's FileLock — the same lock
     engine.maintain() takes while compacting the feed (an unlocked
     flush landing between compaction's rmtree and rename would be
     silently deleted)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from serverless_datalake_aws_spark.sources.commitlog import FileLock
+    from serverless_datalake_aws_spark.sources.writers import append_rows
 
     if not rows:
         return 0
-    table = pa.Table.from_pylist(rows, schema=schema)
-    os.makedirs(path, exist_ok=True)
     with FileLock(path.rstrip("/") + ".lock", ttl=30.0):
-        pq.write_table(
-            table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")
-        )
-    return len(rows)
+        return append_rows(None, path, rows, schema)
 
 
 def _walk_final_plan(executed):
@@ -287,26 +282,9 @@ class MetricsRecorder:
     def flush(self) -> int:
         """Persist buffered rows to the parquet metrics table (via the
         shared `flush_rows` exporter). Returns rows written."""
-        import pyarrow as pa
-
         with self._lock:
             rows, self._buffer = self._buffer, []
-        return flush_rows(
-            self.path,
-            rows,
-            pa.schema(
-                [
-                    ("ts", pa.timestamp("us", tz="UTC")),
-                    ("func_name", pa.string()),
-                    ("fingerprint", pa.int64()),
-                    ("label", pa.string()),
-                    ("plan", pa.string()),
-                    ("wall_ms", pa.float64()),
-                    ("out_rows", pa.int64()),
-                    ("shuffle_bytes", pa.int64()),
-                ]
-            ),
-        )
+        return flush_rows(self.path, rows, METRICS_SCHEMA)
 
 
 _open = threading.local()  # .window: the WorkWindow open on this thread

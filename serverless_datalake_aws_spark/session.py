@@ -114,6 +114,12 @@ def get_session(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the generated-code cache: an ingest → index_cdc → search →
+        # process/merge/maintain round plans more distinct stages than
+        # the default 100 entries, so the LRU evicted them and every
+        # round re-ran Janino on ~130 classes (24 with this size), each
+        # then JIT-compiled from scratch again. A static conf: launch only
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -6,16 +6,169 @@ and format-preserving; `promote` is read→(transform)→write — the
 medallion bronze→silver step — and `compact` rewrites a partitioned
 table into ~target-sized files (the reference's small-file problem is
 its #1 scaling flaw at 100 TB, SURVEY §4.3).
+
+`append_rows` is the driver-side writer for rows already held in driver
+memory (ingest batches, lineage events, telemetry, codebooks): the files
+Spark would write, without a Spark job.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from serverless_datalake_aws_spark.sources.readers import detect_format, read_any
+
+
+def _arrow_type(dt: T.DataType):
+    import pyarrow as pa
+
+    if isinstance(dt, T.ArrayType):
+        return pa.list_(
+            pa.field("element", _arrow_type(dt.elementType), dt.containsNull)
+        )
+    return {
+        T.StringType: pa.string,
+        T.LongType: pa.int64,
+        T.IntegerType: pa.int32,
+        T.DoubleType: pa.float64,
+        T.FloatType: pa.float32,
+        T.BooleanType: pa.bool_,
+        T.DateType: pa.date32,
+        T.TimestampType: lambda: pa.timestamp("us", tz="UTC"),
+    }[type(dt)]()
+
+
+def _spark_footer(schema: T.StructType) -> dict[str, str]:
+    """The key-value metadata Spark's ParquetWriteSupport puts in every
+    footer: the short Spark version and the catalyst schema as compact
+    JSON (Scala's field order, which jsonValue() keeps)."""
+    import pyspark
+
+    version = re.match(r"\d+\.\d+\.\d+", pyspark.__version__).group(0)
+    return {
+        "org.apache.spark.version": version,
+        "org.apache.spark.sql.parquet.row.metadata": json.dumps(
+            schema.jsonValue(), separators=(",", ":")
+        ),
+    }
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while n >= 0x80:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    return bytes(out + bytes([n]))
+
+
+def _add_footer_metadata(path: str, kv: dict[str, str]) -> None:
+    """Give a parquet file written without key-value metadata exactly
+    `kv` as its footer's key-value list. pyarrow can write either no
+    metadata or the schema's metadata plus an `ARROW:schema` key Spark
+    never writes, so the list is appended here as FileMetaData field 5
+    in Thrift's compact encoding: a long-form field header (id 5 after a
+    higher id), a list of KeyValue structs, then the struct's stop byte
+    the serialized footer ends with."""
+    entries = b"".join(
+        b"\x18" + _varint(len(k)) + k + b"\x18" + _varint(len(v)) + v + b"\x00"
+        for k, v in ((k.encode(), v.encode()) for k, v in kv.items())
+    )
+    # list header: size (< 15, Spark's two keys) and element type struct
+    field = b"\x09" + _varint(5 << 1) + bytes([len(kv) << 4 | 12]) + entries
+    with open(path, "r+b") as f:
+        f.seek(-8, os.SEEK_END)
+        tail = f.read(8)
+        n = int.from_bytes(tail[:4], "little")
+        f.seek(-8 - n, os.SEEK_END)
+        footer = f.read(n)
+        if tail[4:] != b"PAR1" or footer[-1:] != b"\x00":
+            raise ValueError(f"{path}: not a plain parquet footer")
+        footer = footer[:-1] + field + b"\x00"
+        f.seek(-8 - n, os.SEEK_END)
+        f.write(footer + len(footer).to_bytes(4, "little") + b"PAR1")
+
+
+def partition_dir(spark: SparkSession, col: str, value) -> str:
+    """`col=value` escaped by Spark's own rule (the JVM's
+    ExternalCatalogUtils, a driver-side call that runs no job), so a
+    partition this module writes is the directory a Spark write of the
+    same value would create and partition discovery reads back."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return utils.getPartitionPathString(col, None if value is None else str(value))
+
+
+def append_rows(
+    spark: SparkSession | None,
+    path: str,
+    rows: list[dict],
+    schema: T.StructType,
+    partition_by: tuple[str, ...] = (),
+) -> int:
+    """Append driver-held `rows` (dicts keyed by `schema`'s names) to the
+    parquet table at `path`, one file per partition of `partition_by`.
+    Returns the rows written; no rows write nothing.
+
+    Local paths are written with pyarrow: Spark's physical schema,
+    footer metadata and timestamp encoding (the session's
+    outputTimestampType), in partition directories named by
+    `partition_dir`. Each file is written under a `.`-prefixed name and
+    renamed into place, so no reader — batch scans and the `_changelog`
+    file stream alike skip `.`/`_` names — ever lists a partial file.
+    Remote (`scheme://`) paths keep Spark's writer and its committer.
+    `spark` may be None for an unpartitioned local table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not rows:
+        return 0
+    if "://" in path:
+        spark.createDataFrame(
+            [tuple(r[n] for n in schema.names) for r in rows], schema
+        ).write.mode("append").partitionBy(*partition_by).parquet(path)
+        return len(rows)
+    data = T.StructType([f for f in schema.fields if f.name not in partition_by])
+    arrow = pa.schema(
+        [pa.field(f.name, _arrow_type(f.dataType), f.nullable) for f in data]
+    )
+    ts_type = (
+        spark.conf.get("spark.sql.parquet.outputTimestampType")
+        if spark is not None
+        else "TIMESTAMP_MICROS"
+    )
+    groups: dict[tuple, list[dict]] = {}
+    for r in rows:
+        groups.setdefault(tuple(r[c] for c in partition_by), []).append(r)
+    for values, part in groups.items():
+        subdir = os.path.join(
+            path, *(partition_dir(spark, c, v) for c, v in zip(partition_by, values))
+        )
+        os.makedirs(subdir, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        staged = os.path.join(subdir, f".{name}")
+        try:
+            pq.write_table(
+                pa.Table.from_pylist(part, schema=arrow),
+                staged,
+                compression="snappy",
+                store_schema=False,
+                use_deprecated_int96_timestamps=ts_type == "INT96",
+                coerce_timestamps="ms" if ts_type == "TIMESTAMP_MILLIS" else None,
+            )
+            _add_footer_metadata(staged, _spark_footer(data))
+            os.rename(staged, os.path.join(subdir, name))
+        except BaseException:
+            if os.path.exists(staged):
+                os.remove(staged)
+            raise
+    return len(rows)
 
 
 def write_any(

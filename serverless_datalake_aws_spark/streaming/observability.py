@@ -38,26 +38,24 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
-STREAM_METRIC_COLUMNS = (
-    "ts",
-    "query_id",
-    "run_id",
-    "name",
-    "batch_id",
-    "num_input_rows",
-    "input_rows_per_s",
-    "process_rows_per_s",
-    "trigger_ms",
-    "observed",
-)
-
-# Spark-side schema for an EMPTY metrics read (nothing flushed yet)
-STREAM_METRICS_SCHEMA = (
-    "ts timestamp, query_id string, run_id string, name string, "
-    "batch_id long, num_input_rows long, input_rows_per_s double, "
-    "process_rows_per_s double, trigger_ms long, observed string"
+# the `_stream_metrics` table's schema (also an empty read's, before
+# anything is flushed)
+STREAM_METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("query_id", T.StringType()),
+        T.StructField("run_id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("batch_id", T.LongType()),
+        T.StructField("num_input_rows", T.LongType()),
+        T.StructField("input_rows_per_s", T.DoubleType()),
+        T.StructField("process_rows_per_s", T.DoubleType()),
+        T.StructField("trigger_ms", T.LongType()),
+        T.StructField("observed", T.StringType()),
+    ]
 )
 
 
@@ -130,27 +128,8 @@ class StreamMetricsRecorder(StreamingQueryListener):
             return list(self._buffer)
 
     def flush(self) -> int:
-        import pyarrow as pa
-
         from serverless_datalake_aws_spark.operators.metrics import flush_rows
 
         with self._lock:
             rows, self._buffer = self._buffer, []
-        return flush_rows(
-            self.path,
-            rows,
-            pa.schema(
-                [
-                    ("ts", pa.timestamp("us", tz="UTC")),
-                    ("query_id", pa.string()),
-                    ("run_id", pa.string()),
-                    ("name", pa.string()),
-                    ("batch_id", pa.int64()),
-                    ("num_input_rows", pa.int64()),
-                    ("input_rows_per_s", pa.float64()),
-                    ("process_rows_per_s", pa.float64()),
-                    ("trigger_ms", pa.int64()),
-                    ("observed", pa.string()),
-                ]
-            ),
-        )
+        return flush_rows(self.path, rows, STREAM_METRICS_SCHEMA)
