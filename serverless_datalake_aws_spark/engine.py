@@ -42,13 +42,14 @@ it is the step whose cost still grows with the lake.
 
 from __future__ import annotations
 
+import atexit
 import json
 import shutil
 import time as _time
 import uuid
 from datetime import datetime, timezone
 from pathlib import Path
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -187,16 +188,19 @@ def _unindexed() -> Column:
     )
 
 
-def _id_frame(spark: SparkSession, ids) -> DataFrame:
+def _id_frame(spark: SparkSession, ids, at: datetime | None = None) -> DataFrame:
     """`ids` as a broadcast one-column local relation (built from an
     arrow table, so no job runs to ship it): semi-joined against a
     scan, it keeps an id set of any size out of the plan text, where an
-    `isin` literal list would sit."""
+    `isin` literal list would sit. With `at`, every id also carries it
+    as a timestamp column `_at`: a value in the data, where a timestamp
+    literal would be inlined into freshly generated code on each call."""
     import pyarrow as pa
 
-    return F.broadcast(
-        spark.createDataFrame(pa.table({"id": pa.array(list(ids), pa.string())}))
-    )
+    cols = {"id": pa.array(list(ids), pa.string())}
+    if at is not None:
+        cols["_at"] = pa.array([at] * len(cols["id"]), pa.timestamp("us", tz="UTC"))
+    return F.broadcast(spark.createDataFrame(pa.table(cols)))
 
 
 def generate_sample_data(data_type: str) -> dict[str, Any]:
@@ -1155,7 +1159,9 @@ class DataLakeEngine:
         Lambdas. Pair with streaming.observability.observe_quality to
         ride per-batch rule-violation counts in the same rows. Returns
         the recorder; idempotent. `disable_stream_metrics()` detaches
-        cleanly (Python streaming listeners support removeListener)."""
+        cleanly (Python streaming listeners support removeListener), and
+        runs at interpreter exit: events the JVM delivers after the
+        Python side is gone would each log a py4j connection error."""
         from serverless_datalake_aws_spark.streaming.observability import (
             StreamMetricsRecorder,
         )
@@ -1168,13 +1174,21 @@ class DataLakeEngine:
             rec = StreamMetricsRecorder(self.stream_metrics_path)
             self.spark.streams.addListener(rec)
             self._stream_metrics_recorder = rec
+            atexit.register(self.disable_stream_metrics)
         return self._stream_metrics_recorder
 
     def disable_stream_metrics(self) -> None:
         rec = getattr(self, "_stream_metrics_recorder", None)
-        if rec is not None:
+        if rec is None:
+            return
+        jsc = self.spark.sparkContext._jsc
+        if jsc is not None:  # a stopped context has dropped its listeners
+            # deliver what is already posted first: a callback still in
+            # flight when the interpreter exits is never answered
+            jsc.sc().listenerBus().waitUntilEmpty()
             self.spark.streams.removeListener(rec)
-            self._stream_metrics_recorder = None
+        self._stream_metrics_recorder = None
+        atexit.unregister(self.disable_stream_metrics)
 
     def stream_metrics(self) -> DataFrame:
         """The per-batch streaming metrics table (flushes first). An
@@ -2042,7 +2056,9 @@ class DataLakeEngine:
         return self.spark.createDataFrame(rows, "id string")
 
     def _mark_indexed(
-        self, ids: DataFrame | None = None, data_types: list[str] | None = None
+        self,
+        ids: DataFrame | Iterable[str] | None = None,
+        data_types: list[str] | None = None,
     ) -> None:
         """Metadata upsert (K7): stamp indexed=true for exactly the ids
         just indexed — same last-writer-wins semantics as the reference's
@@ -2051,9 +2067,11 @@ class DataLakeEngine:
         Scale contract: only the data_type partitions containing those
         ids are rewritten (the rest of _meta is untouched on disk), and
         the rewrite goes to a tmp dir first, then swaps — the source is
-        never deleted while a task could still be reading it. With no
-        `ids`, all currently-unindexed rows are stamped (the full-rebuild
-        path after _rebuild_search_index). `data_types`, when the caller
+        never deleted while a task could still be reading it. `ids` is an
+        id frame, or the distinct ids themselves when the caller holds
+        them driver-side. With no `ids`, all currently-unindexed rows are
+        stamped (the full-rebuild path after _rebuild_search_index).
+        `data_types`, when the caller
         knows them, are the partitions to rewrite; otherwise they are
         collected from the ids' `_meta` rows.
 
@@ -2073,14 +2091,21 @@ class DataLakeEngine:
             self._mark_indexed_inner(ids, data_types, lock=lk)
 
     def _mark_indexed_inner(
-        self, ids: DataFrame | None, data_types: list[str] | None, lock=None
+        self,
+        ids: DataFrame | Iterable[str] | None,
+        data_types: list[str] | None,
+        lock=None,
     ) -> None:
         meta = self.meta()
         if ids is None:
             ids = meta.filter(_unindexed()).select("id")
-        hit_ids = F.broadcast(
-            ids.select("id").distinct().withColumn("_hit", F.lit(True))
-        )
+        # pinned with the stamp time as data: the set a broadcast would
+        # ship to the driver anyway, so the warm stamp reuses its code
+        if isinstance(ids, DataFrame):
+            ids = {r[0] for r in ids.select("id").collect()}
+        if not ids:
+            return
+        hit_ids = _id_frame(self.spark, ids, at=datetime.now(timezone.utc))
         affected = data_types
         if affected is None:
             affected = [
@@ -2097,15 +2122,12 @@ class DataLakeEngine:
             .join(hit_ids, "id", "left")
             .withColumn(
                 "indexed",
-                F.when(F.col("_hit"), F.lit(True)).otherwise(F.col("indexed")),
-            )
-            .withColumn(
-                "indexed_at",
-                F.when(F.col("_hit"), F.current_timestamp()).otherwise(
-                    F.col("indexed_at")
+                F.when(F.col("_at").isNotNull(), F.lit(True)).otherwise(
+                    F.col("indexed")
                 ),
             )
-            .drop("_hit")
+            .withColumn("indexed_at", F.coalesce("_at", "indexed_at"))
+            .drop("_at")
         )
         if self.is_remote:
             # Object stores: dynamic partition overwrite replaces only
@@ -2326,8 +2348,7 @@ class DataLakeEngine:
         # would assert searchability for a tokenless record, forever.
         if found:
             self._mark_indexed(
-                _id_frame(self.spark, found),
-                sorted({rows[i]["data_type"] for i in found}),
+                found, sorted({rows[i]["data_type"] for i in found})
             )
         return len(found)
 
@@ -2897,7 +2918,8 @@ class DataLakeEngine:
     ) -> DataFrame:
         """Cosine top-k for a WHOLE query set in ONE job — the batched
         serving shape (vector_search pays a per-call job-dispatch floor
-        measured at ~1.3 s on local[32], tools/probe_vector_index.py;
+        measured at ~1.3 s on local[32], SCALE.md "Round-9: engine
+        vector-index probe";
         a reranker or eval harness with hundreds of queries wants one
         plan, not a driver loop). Semantics are vector_search's
         exactly, per query: same cell ranking, same probe restriction,

@@ -40,20 +40,6 @@ def token_hash(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 14), 16, 10).cast("long")
 
 
-def token_hashes_mod_p(text_col: Column | str) -> Column:
-    """array<bigint>: md5-derived hash mod P for each distinct token."""
-    return F.transform(distinct_tokens(text_col), lambda t: token_hash(t) % MINHASH_P)
-
-
-def shingle_hashes_mod_p(text_col: Column | str, n: int = 3) -> Column:
-    """array<bigint>: md5-derived hash mod P for each distinct word
-    n-gram shingle (order-sensitive — discriminates reshuffled text even
-    over a small vocabulary)."""
-    return F.transform(
-        F.array_distinct(word_ngrams(text_col, n)), lambda t: token_hash(t) % MINHASH_P
-    )
-
-
 def minhash_mins(hashes: Column) -> list[Column]:
     """The K MinHash minima as separate Columns.
 

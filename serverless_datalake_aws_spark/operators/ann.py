@@ -12,9 +12,9 @@ DuckDB value oracles guard this exact code path:
   codebook, the code assignment and the ADC table builder.
 
 The stages stay separate so an index can be built once, persisted and
-queried many times (the FAISS deployment lifecycle);
-tools/scale_probe_ann.py drives them at 2M vectors / 64 cells to
-measure that query cost scales with PROBED CELLS, not corpus size.
+queried many times (the FAISS deployment lifecycle); SCALE.md
+"Round-7: IVF-PQ at honest scale" drives them at 2M vectors / 64 cells
+to measure that query cost scales with PROBED CELLS, not corpus size.
 
 Residual vs raw PQ is a property of the codebooks: with
 `residual=True` the PQ codes quantize v - centroid(cell) instead of

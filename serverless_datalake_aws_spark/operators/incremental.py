@@ -271,11 +271,6 @@ class _EpochStateStore:
                     pass
 
 
-def _read_partials(spark, path: str) -> DataFrame | None:
-    """Stored partial state via the epoch store (legacy-layout aware)."""
-    return _EpochStateStore(spark, path).read()
-
-
 class EpochPartitionedTable:
     """Append-shaped maintained state with epoch-idempotent writes —
     the second storage contract (the _EpochStateStore sibling for

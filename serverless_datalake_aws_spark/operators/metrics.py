@@ -329,13 +329,21 @@ class WorkWindow:
         _open.window = None
 
     def work(self) -> dict:
-        """Jobs; stages that ran tasks (not skipped for reused shuffle
-        output), their tasks, single-task ones, shuffle bytes, run time."""
+        """Jobs; stages that ran tasks, their tasks, single-task ones,
+        shuffle bytes, run time. A stage a job skipped for reused shuffle
+        output ran nothing: it is not read (Spark evicts skipped stages
+        first, so it may be gone even while the window is kept)."""
         store = self.spark.sparkContext._jsc.sc().statusStore()
+        wrapper = self.spark._jvm.org.apache.spark.status.JobDataWrapper
+        read_job = lambda j: store.store().read(wrapper._java_lang_class, j)  # noqa: E731
         stages = set()
         for j in range(self._jobs0, self._jobs1):
-            ids = _stored(store.job, j).stageIds()
-            stages.update(ids.apply(i) for i in range(ids.size()))
+            job = _stored(read_job, j)
+            ids, skipped = job.info().stageIds(), job.skippedStages()
+            stages.update(
+                s for s in (ids.apply(i) for i in range(ids.size()))
+                if not skipped.contains(s)
+            )
         out = {"jobs": self._jobs1 - self._jobs0, "stages": 0, "tasks": 0}
         out.update(single_task_stages=0, shuffle_bytes=0, executor_run_ms=0)
         for st in (_stored(store.lastStageAttempt, s) for s in stages):

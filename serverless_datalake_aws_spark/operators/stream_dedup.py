@@ -1,7 +1,7 @@
 """Near-dup-on-ingest index: the MinHash LSH pipeline maintained as a
 document stream lands (SURVEY §2.9/§2.11 — the streaming form of the
-d04 dedup path; backs `st15_stream_minhash_index` and
-`tools/probe_stream_neardup_ingest.py`).
+d04 dedup path; backs `st15_stream_minhash_index`; measured at 472k
+docs in SCALE.md "Round-11 (cont.): streaming near-dup ingest").
 
 Each absorbed micro-batch:
   1. sketches ITS docs (3-gram shingles → md5 minhash → LSH band keys
@@ -16,8 +16,8 @@ Each absorbed micro-batch:
 So every near-dup pair surfaces exactly once — the moment its SECOND
 member arrives — and history is never re-SKETCHED.
 
-Scale contract (what grows with history, measured in
-tools/probe_stream_neardup_ingest.py; SCALE.md round-11):
+Scale contract (what grows with history, measured in SCALE.md
+"Round-11 (cont.): streaming near-dup ingest"):
 - The sketch pass and within-batch self-join are |batch|-local.
 - The cross-batch probe scans the accumulated BAND INDEX — 8-byte
   keys + ids, ~1% of corpus bytes — the honest inverted-index cost.
@@ -34,8 +34,9 @@ tools/probe_stream_neardup_ingest.py; SCALE.md round-11):
   directories outright. A dup-dense batch whose candidates hit every
   bucket degrades to one full index scan — the pre-prune cost, never
   worse. `prune_history=False` keeps the naive O(corpus)-per-batch
-  double scan; it exists so tools/probe_stream_neardup_ingest.py can
-  measure what the pruning buys.
+  double scan: the reference the pruned path is tested against
+  (tests/test_stream_dedup.py), and the baseline SCALE.md's round-11
+  numbers measured the pruning against.
 
 State rides EpochPartitionedTable (epoch-partitioned overwrites + an
 atomic pointer), so absorption is idempotent per epoch: a foreachBatch

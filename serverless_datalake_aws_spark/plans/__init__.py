@@ -200,8 +200,3 @@ def all_oracles(include_aliases: bool = False) -> dict[str, str]:
             if oracle is not None:
                 out[alias] = oracle
     return dict(sorted(out.items()))
-
-
-def get_spec(name: str) -> QuerySpec:
-    _load()
-    return _REGISTRY[name]

@@ -1029,7 +1029,8 @@ def st15_stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle table is hive-bucketed on pmod(doc_id, N), so the probe
     prunes partition dirs + row groups instead of re-scanning the
     corpus per batch — operators/stream_dedup.MinHashIngestIndex,
-    measured before/after in tools/probe_stream_neardup_ingest.py);
+    measured before/after in SCALE.md "Round-11 (cont.): streaming
+    near-dup ingest");
     index growth is |docs| × bands rows."""
     import shutil
     import tempfile

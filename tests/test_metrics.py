@@ -329,3 +329,51 @@ def test_window_raises_on_evicted_ids(tmp_path):
         ["EVICTED", "work"],
         ["EVICTED", "plans"],
     ], out.stdout + out.stderr[-2000:]
+
+
+_REUSE_PROBE = """
+from pyspark.sql import SparkSession
+from serverless_datalake_aws_spark.operators.metrics import WorkWindow
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .config("spark.ui.retainedStages", "10")
+    .config("spark.sql.adaptive.enabled", "false")
+    .getOrCreate()
+)
+shuffled = spark.range(100).repartition(2)
+shuffled.collect()
+for _ in range(20):
+    spark.range(3).collect()
+with WorkWindow(spark) as w:
+    shuffled.collect()  # its map stage is skipped: the output is reused
+    for _ in range(3):
+        spark.range(3).collect()
+print("WORK", w.work())
+spark.stop()
+"""
+
+
+def test_window_counts_reused_shuffle_output(tmp_path):
+    """A job that reuses shuffle output lists a skipped map stage, which
+    Spark's status store evicts before any stage that ran. The window
+    still counts: the skipped stage ran no task, so it is not read."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _REUSE_PROBE],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": os.pathsep.join(
+            [repo, os.environ.get("PYTHONPATH", "")])},
+    )
+    work = [ln for ln in out.stdout.splitlines() if ln.startswith("WORK")]
+    assert len(work) == 1, out.stdout + out.stderr[-2000:]
+    # the reusing job's result stage (2 tasks) and three 1-task jobs
+    assert "'jobs': 4, 'stages': 4, 'tasks': 5," in work[0], work[0]

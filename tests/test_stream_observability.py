@@ -111,3 +111,41 @@ def test_stream_metrics_empty_before_any_flush(spark, tmp_path):
     assert df.count() == 0
     assert "batch_id" in df.columns
     lake.disable_stream_metrics()
+
+
+_EXIT_PROBE = """
+import sys
+from serverless_datalake_aws_spark.engine import DataLakeEngine
+from serverless_datalake_aws_spark.session import get_session
+spark = get_session(app_name="exit-probe", cpus=1)
+eng = DataLakeEngine(spark, sys.argv[1])
+eng.enable_stream_metrics()
+eng.ingest_batch([{"text": "alpha"}], data_type="t")
+eng.index_cdc()
+print("DRAINED")
+"""
+
+
+def test_stream_listener_detached_at_exit(tmp_path):
+    """A script that enables stream metrics and exits right after a
+    drain leaves no progress event for the JVM to deliver to a Python
+    side that is gone (each would log a py4j connection error)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_PROBE, str(tmp_path / "lake")],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+        env={
+            **os.environ,
+            "SPARK_GRAFT_DRIVER_MEM": "1g",
+            "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+        },
+    )
+    assert "DRAINED" in out.stdout, out.stderr[-2000:]
+    assert "Py4JNetworkException" not in out.stderr, out.stderr[-4000:]

@@ -38,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_session(app_name="lake-maintenance")
     engine = DataLakeEngine(spark, args.lake_root)
-    rc = 0
     if args.crawl:
         found = engine.crawl()
         print(json.dumps({"step": "crawl", "datasets": [d.name for d in found]}))
@@ -46,17 +45,17 @@ def main(argv: list[str] | None = None) -> int:
         dropped = engine.dedup_zone("raw")
         print(json.dumps({"step": "dedup", "rows_dropped": dropped}))
     if args.compact is not None:
-        from serverless_datalake_aws_spark.sources.writers import compact
-
-        n = compact(spark, f"{engine.zone('raw')}/records", target_file_mb=args.compact)
-        print(json.dumps({"step": "compact", "files_after": n}))
+        # the engine's zone rewrite keeps the hive partitions index_cdc
+        # reads and publishes under the zone lock through a staged swap
+        out = engine.optimize_zone("raw", target_file_mb=args.compact)
+        print(json.dumps({"step": "compact", "files_after": out["files_after"]}))
     if args.expire is not None:
         gone = engine.expire("raw", keep_days=args.expire)
         print(json.dumps({"step": "expire", "partitions_dropped": gone}))
     if args.report:
         rows = [r.asDict() for r in engine.lake_report().collect()]
         print(json.dumps({"step": "report", "rows": rows}))
-    return rc
+    return 0
 
 
 if __name__ == "__main__":

@@ -1,21 +1,21 @@
 #!/usr/bin/env python
-"""Deterministic 10x scale probe (SCALE.md "10x scale probe" section).
+"""Deterministic 10x fixture (SCALE.md "10x scale probe" sections).
 
 Rebuilds the 10x fixture from sf0.1 — per document: the original, 2
 one-word deletions, 1 verbatim copy, 6 word-shuffles (replica near-dup
 structure that stresses banding/dedup); per embedding: 10 sigma=0.05
-noise replicas (stresses ANN bucket selectivity). All randomness is
-seeded per row id, so the fixture is bit-identical across rounds and the
-numbers are comparable round-over-round. Remaining sf0.1 tables are
-copied verbatim so any registered query runs against the fixture dir.
+noise replicas (stresses ANN bucket selectivity); events and orders
+replicated 10x. All randomness is seeded per row id, so the fixture is
+bit-identical across rounds and the numbers are comparable
+round-over-round. Remaining sf0.1 tables are copied verbatim so any
+registered query runs against the fixture dir. Time queries on it with
+the registry's one timing loop:
 
-Usage:
-    python tools/scale_probe.py                    # default probe set
-    python tools/scale_probe.py d04 s18 t29        # prefix-filtered
-    SPARK_GRAFT_PROBE_DIR=/tmp/sfx10 python tools/scale_probe.py
+    SPARK_GRAFT_PROBE_DIR=/tmp/spark_graft_10x python tools/scale_probe.py
+    SPARK_GRAFT_SF_DIR=/tmp/spark_graft_10x python tools/timing_sweep.py d04 s18 t29
 
-Prints one JSON line per query plus a summary (same shape as
-timing_sweep.py).
+The probe sets and the z-order file-skipping probe this script ran
+before are in `git show 640f93c:tools/scale_probe.py`.
 """
 
 from __future__ import annotations
@@ -23,40 +23,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 SRC = "/root/testdata/sf0.1"
-DEFAULT_PROBE = (
-    "d03_ngram_jaccard_pairs",
-    "d04_minhash_lsh_pairs",
-    "d09_containment_pairs",
-    "d11_simhash_banded_pairs",
-    "s02_lsh_ann",
-    "s03_embedding_neardup",
-    "s05_ivf_ann",
-    "s12_knn_graph",
-    "s18_semdedup",
-    "t28_pii_redaction",
-    "t29_repetition_signals",
-    "t30_pps_sample",
-    "p05_training_data_pipeline",
-    "p06_curation_pipeline",
-    # round-5 probe targets (events/orders now also build 10x)
-    "e17_incremental_rollup",
-    "m05_quality_constraints",
-    # round-6: composed IVF-PQ (raw + residual) — 10x vectors stress the
-    # probe-join fan-in; d18 at REAL scale is in scale_probe_100x.py
-    "s21_ivf_pq_ann",
-    "s22_ivfpq_residual_ann",
-    "d18_simhash56_banded_pairs",
-)
 
 
 _SHARDS = 16  # single-file tables scan as ONE Spark task regardless of
@@ -222,140 +195,8 @@ def build_fixture(out_dir: str) -> None:
             fh.write("ok\n")
 
 
-def zorder_probe(spark, out_dir: str) -> dict:
-    """Measure z-order file skipping on the 10x events table: write the
-    same 1M rows (a) z-clustered on (user_id, value_cents) and (b)
-    sorted on user_id only, then count the files whose parquet footer
-    min/max box CONTAINS a 2-D point predicate — the files any
-    stats-pruning scan must read. Z-order must prune on BOTH columns;
-    single-column sort prunes only its own column."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    from serverless_datalake_aws_spark.operators.layout import zorder_write
-
-    ev = spark.read.parquet(os.path.join(out_dir, "events.parquet")).select(
-        "event_id",
-        "user_id",
-        F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
-    zpath = os.path.join(out_dir, "_zorder_events")
-    spath = os.path.join(out_dir, "_sorted_events")
-    zorder_write(ev, zpath, ("user_id", "value_cents"), bits=10, num_files=16)
-    (
-        ev.repartitionByRange(16, "user_id")
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    def file_boxes(path: str) -> list[dict]:
-        boxes = []
-        for f in sorted(_glob.glob(path + "/part-*.parquet")):
-            md = pq.read_metadata(f)
-            mins: dict[str, int] = {}
-            maxs: dict[str, int] = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    nm = col.path_in_schema
-                    if nm in ("user_id", "value_cents") and col.statistics:
-                        s = col.statistics
-                        mins[nm] = min(mins.get(nm, s.min), s.min)
-                        maxs[nm] = max(maxs.get(nm, s.max), s.max)
-            boxes.append({"mins": mins, "maxs": maxs})
-        return boxes
-
-    def hits(boxes: list[dict], preds: dict[str, int]) -> int:
-        return sum(
-            all(
-                b["mins"][c] <= v <= b["maxs"][c]
-                for c, v in preds.items()
-            )
-            for b in boxes
-        )
-
-    # mid-range point per dimension; probe each dimension alone and both
-    mid = ev.agg(
-        F.expr("percentile(user_id, 0.5)").cast("long"),
-        F.expr("percentile(value_cents, 0.5)").cast("long"),
-    ).collect()[0]
-    u, v = mid[0], mid[1]
-    zb, sb = file_boxes(zpath), file_boxes(spath)
-    return {
-        "probe": "zorder_file_skipping",
-        "predicate": {"user_id": u, "value_cents": v},
-        "files_total": len(zb),
-        "files_read": {
-            "zorder": {
-                "user_only": hits(zb, {"user_id": u}),
-                "value_only": hits(zb, {"value_cents": v}),
-                "both": hits(zb, {"user_id": u, "value_cents": v}),
-            },
-            "sorted_by_user": {
-                "user_only": hits(sb, {"user_id": u}),
-                "value_only": hits(sb, {"value_cents": v}),
-                "both": hits(sb, {"user_id": u, "value_cents": v}),
-            },
-        },
-    }
-
-
-def main() -> None:
+if __name__ == "__main__":
     out_dir = os.environ.get("SPARK_GRAFT_PROBE_DIR", "/tmp/spark_graft_10x")
     t0 = time.time()
     build_fixture(out_dir)
-    build_sec = round(time.time() - t0, 1)
-
-    from serverless_datalake_aws_spark.plans import all_queries  # noqa: E402
-    from serverless_datalake_aws_spark.session import get_session  # noqa: E402
-
-    prefixes = tuple(a for a in sys.argv[1:] if a != "zorder")
-    run_zorder = "zorder" in sys.argv[1:]
-    qmap = all_queries()
-    names = [
-        n
-        for n in (sorted(qmap) if prefixes else DEFAULT_PROBE)
-        if not prefixes or any(n.startswith(p) for p in prefixes)
-    ]
-    if run_zorder and not prefixes:
-        names = []
-    spark = get_session(app_name="scale_probe")
-    if run_zorder:
-        print(json.dumps(zorder_probe(spark, out_dir)))
-    results: dict[str, float] = {}
-    failures: dict[str, str] = {}
-    for name in names:
-        try:  # warmup at sf0.001 (codegen), then one timed 10x run
-            qmap[name](spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            t1 = time.time()
-            qmap[name](spark, out_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            results[name] = round(time.time() - t1, 2)
-            print(json.dumps({"query": name, "sec_10x": results[name]}))
-        except Exception as exc:  # noqa: BLE001
-            failures[name] = f"{type(exc).__name__}: {exc}"[:200]
-            print(json.dumps({"query": name, "error": failures[name]}))
-    print(
-        json.dumps(
-            {
-                "fixture": out_dir,
-                "fixture_build_sec": build_sec,
-                "n": len(results),
-                "total_sec": round(sum(results.values()), 2),
-                "slowest": sorted(
-                    results.items(), key=lambda kv: -kv[1]
-                )[:10],
-                "failures": failures,
-            }
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()
+    print(json.dumps({"fixture": out_dir, "fixture_build_sec": round(time.time() - t0, 1)}))

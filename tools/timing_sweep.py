@@ -11,6 +11,12 @@ Usage:
     python tools/timing_sweep.py                  # all queries, sf0.1
     python tools/timing_sweep.py t11 e07 d04      # prefix-filtered
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/timing_sweep.py
+    SPARK_GRAFT_SF_DIR=/tmp/spark_graft_10x python tools/timing_sweep.py d04
+
+The last line times the 10x fixture that tools/scale_probe.py builds.
+Run a prefix set once with SPARK_GRAFT_CPUS=1 and once with
+SPARK_GRAFT_CPUS=4 for a row's 1-core vs 4-core ratio. Warm-up runs
+read SPARK_GRAFT_WARM_DIR (default sf0.001).
 """
 
 from __future__ import annotations
