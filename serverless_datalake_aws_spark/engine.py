@@ -904,11 +904,13 @@ class DataLakeEngine:
         column, written to `_stats/<zone>`. The reference has no
         skipping layer — every Athena query scans the whole prefix
         (SURVEY §4.3); this is the engine-native twin of Delta's
-        per-file stats. Cost is O(#files) footer reads, distributed —
-        no data pages. Derived + rebuildable, so a plain overwrite is
-        safe (a torn write is repaired by re-running analyze; readers
-        fall back to full scans on a missing/partial index via the
-        fail-open contract in sources/stats.py). Returns #files."""
+        per-file stats. Cost is O(#files) footer reads on the driver —
+        no data pages, no Spark job. The new index file is published
+        (staged, renamed into place) BEFORE the old ones are removed,
+        so a concurrent `scan_pruned`/`maintain` never finds the index
+        missing; in between, a reader may see both, and a duplicate
+        stats row only widens `prune_files` (fail-open). Returns
+        #files."""
         if self.is_remote:
             raise NotImplementedError(
                 "footer walk requires a local lake root in this build; on "
@@ -916,19 +918,31 @@ class DataLakeEngine:
                 "+ footer reads via the S3A client"
             )
         from serverless_datalake_aws_spark.sources.stats import (
-            collect_file_stats,
+            STATS_SCHEMA,
+            file_stat_rows,
             list_parquet_files,
         )
 
         self._recover_zone_swap(zone)  # heal a crashed rewrite first
         root = self._stats_root(zone)
         files = list_parquet_files(root)
-        st = collect_file_stats(self.spark, root, files=files)
-        st.write.mode("overwrite").parquet(f"{self.stats_path}/{zone}")
+        out = Path(self.stats_path) / zone
+        stale = [Path(f) for f in list_parquet_files(out)]
+        out.mkdir(parents=True, exist_ok=True)
+        append_rows(self.spark, str(out), file_stat_rows(files), STATS_SCHEMA)
+        for f in stale:  # with the checksum a Spark-written index left
+            f.unlink(missing_ok=True)
+            f.with_name(f".{f.name}.crc").unlink(missing_ok=True)
         return len(files)
 
     def file_stats(self, zone: str = "raw") -> DataFrame:
-        return self.spark.read.parquet(f"{self.stats_path}/{zone}")
+        # the schema is given: a zone with no files leaves an index
+        # directory with no file in it
+        from serverless_datalake_aws_spark.sources.stats import STATS_SCHEMA
+
+        return self.spark.read.schema(STATS_SCHEMA).parquet(
+            f"{self.stats_path}/{zone}"
+        )
 
     def scan_pruned(self, zone: str, column: str, lo=None, hi=None) -> DataFrame:
         """Range scan of `zone` that opens only files whose min/max
@@ -1723,6 +1737,8 @@ class DataLakeEngine:
         {zone: n_files} for stats refreshes, {table: [versions]} for
         vacuums. Scale: the scan of zone layouts is pure metadata;
         each compaction is one distributed rewrite of one zone."""
+        import pyarrow.parquet as pq
+
         from serverless_datalake_aws_spark.sources.stats import (
             list_parquet_files,
         )
@@ -1752,12 +1768,14 @@ class DataLakeEngine:
                         "files_before": r["files_before"],
                         "files_after": r["files_after"],
                     }
-            # stats staleness: indexed file set != current file set
+            # stats staleness: indexed file set != current file set,
+            # read from the index's `file` column on the driver
             stats_dir = Path(self.stats_path) / zone
             if stats_dir.exists():
                 indexed = {
-                    r["file"]
-                    for r in self.file_stats(zone).select("file").distinct().collect()
+                    f
+                    for p in list_parquet_files(stats_dir)
+                    for f in pq.ParquetFile(p).read(columns=["file"])["file"].to_pylist()
                 }
                 current = set(list_parquet_files(self._stats_root(zone)))
                 if indexed != current:

@@ -84,27 +84,18 @@ def m07_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.select("event_type", "ts", "value").repartitionByRange(
                 8, "ts"
             ).write.parquet(f"{work}/events")
-            lazy_stats = collect_file_stats(spark, f"{work}/events")
-            # materialize the index ONCE: collect_file_stats is a lazy
-            # mapInPandas plan, and every downstream action (the prune
-            # inside pruned_scan) would re-run the whole footer pass
-            # through fresh Python workers. The index is metadata-scale
-            # (#files × #cols rows) so a local copy is the honest analogue
-            # of persisting the stats table next to the data.
-            stat_rows = lazy_stats.collect()
-            stats = spark.createDataFrame(stat_rows, lazy_stats.schema)
+            # a local relation read from the footers on the driver:
+            # collecting its ts rows below runs no job
+            stats = collect_file_stats(spark, f"{work}/events")
             # the zone maps already hold the global min(ts) — read it from
-            # the collected metadata rows (min over #files values) instead
-            # of paying a second full scan of events just to place the day
-            # window (footer min is the exact column min; ts canonicalizes
-            # to unix micros per collect_file_stats). Python min over the
-            # rows already on the driver: the Spark agg this replaces was
-            # a whole job dispatched against an 8-row local relation (the
-            # r10 m07 job-count wall, VERDICT r10 #3).
+            # the metadata rows (min over #files values) instead of paying
+            # a second full scan of events just to place the day window
+            # (footer min is the exact column min; ts canonicalizes to
+            # unix micros per collect_file_stats)
             min_us = min(
                 int(r["min_v"])
-                for r in stat_rows
-                if r["column"] == "ts" and r["min_v"] is not None
+                for r in stats.filter(F.col("column") == "ts").collect()
+                if r["min_v"] is not None
             )
             min_ts = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=min_us)
             lo = min_ts + dt.timedelta(days=1)

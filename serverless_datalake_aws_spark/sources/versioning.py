@@ -282,7 +282,10 @@ def merge_versioned(
     is a server-side copy, and an Iceberg-style manifest would make
     even that free), so the write cost is
     O(affected files + source rows), not O(table). The join that
-    classifies files runs on the stats table — metadata scale.
+    classifies files runs on the stats table — metadata scale. Driver
+    payload: the footer pass reads #files × #top-level columns stats
+    rows on the driver (`collect_file_stats`); the merge keeps one key
+    row per file of the current version.
 
     Safety: matched keys can only live in affected files (zone maps
     have no false negatives), so the rewrite set is always sufficient.
@@ -323,17 +326,14 @@ def merge_versioned(
             f"merge_versioned requires a parquet versioned table; "
             f"{vdir} holds non-parquet data files"
         )
-    # materialize the key column's footer stats ONCE: collect_file_stats
-    # is a lazy mapInPandas plan, and the three metadata reads below
-    # (overlap join, stat-less files, indexed-file inventory) would each
-    # re-run the whole footer pass through fresh Python workers (~0.55 s
-    # per re-run at the m12 fixture — 3 passes where 1 suffices). Only
-    # the key column's rows are read, so only they are collected: at
-    # most one row per file, the same order as the `files` list this
-    # function already holds on the driver, whatever the table's width.
-    lazy_stats = collect_file_stats(spark, vdir, files=files)
-    stat_rows = lazy_stats.filter(F.col("column") == key).collect()
-    stats = spark.createDataFrame(stat_rows, lazy_stats.schema)
+    # the key column's footer stats: read on the driver into a local
+    # relation (no Spark job builds, filters or collects it). The driver
+    # holds one row per file, whatever the table's width: the rows feed
+    # the fail-open set math below, the relation the overlap join.
+    stats = collect_file_stats(spark, vdir, files=files).filter(
+        F.col("column") == key
+    )
+    stat_rows = stats.collect()
     # canonicalize the source key to the SAME numeric image the stats
     # index stores (stats.py _canon/_canon_arrow): timestamps are unix
     # MICROS and dates are epoch DAYS there — a bare CAST(ts AS DOUBLE)
@@ -366,7 +366,7 @@ def merge_versioned(
     # file overlaps iff any source key falls in [min, max]; the
     # numeric image compares at double precision (monotonic — can
     # only over-mark, never under-mark), strings lexically
-    hit = kstats.join(
+    hit = F.broadcast(kstats).join(
         src_keys,
         F.when(
             F.col("kind") == "str",
@@ -381,8 +381,7 @@ def merge_versioned(
     overlap = {r["file"] for r in hit.collect()}
     # fail-open the other way: a file with NO usable key stats might
     # contain matches — it must be treated as overlapping. Driver-side
-    # set math over the already-collected metadata rows (zero extra
-    # Spark jobs — these two reads used to be full footer-pass re-runs)
+    # set math over the key rows already held
     overlap |= {
         r["file"] for r in stat_rows if r["min_v"] is None or r["max_v"] is None
     }
