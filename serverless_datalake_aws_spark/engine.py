@@ -52,7 +52,7 @@ from pathlib import Path
 from typing import Any, Iterable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,6 +83,30 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("payload", T.StringType(), False),
         T.StructField("data_type", T.StringType(), False),
         T.StructField("ingest_date", T.StringType(), False),
+    ]
+)
+
+# Search index postings, partitioned by data_type: one row per (id,
+# token) with the token's count `tf` and the document's length `dl`
+# (its number of tokens, so Σtf over its postings).
+INDEX_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("token", T.StringType()),
+        T.StructField("tf", T.LongType()),
+        T.StructField("dl", T.LongType()),
+        T.StructField("data_type", T.StringType()),
+    ]
+)
+
+# BM25's document statistics, partitioned by data_type: one row per
+# searchable document, so a scope's N is its row count and Σdl the sum
+# of its `dl` column.
+DOC_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("dl", T.LongType()),
+        T.StructField("data_type", T.StringType()),
     ]
 )
 
@@ -186,6 +210,12 @@ def _unindexed() -> Column:
     return ~F.coalesce("indexed", F.lit(False)) & (
         F.coalesce("status", F.lit("")) != "quarantined"
     )
+
+
+def _tokens(payload: Column) -> Column:
+    """A payload's index tokens: lower-cased, split on [^a-z0-9]+, empty
+    pieces dropped. Postings, `dl` and the query all tokenize by it."""
+    return F.array_remove(F.split(F.lower(payload), "[^a-z0-9]+"), "")
 
 
 def _id_frame(spark: SparkSession, ids, at: datetime | None = None) -> DataFrame:
@@ -349,6 +379,10 @@ class DataLakeEngine:
     @property
     def search_index_path(self) -> str:
         return f"{self.root}/_search_index"
+
+    @property
+    def search_stats_path(self) -> str:
+        return f"{self.root}/_search_stats"
 
     @property
     def changelog_path(self) -> str:
@@ -1304,27 +1338,27 @@ class DataLakeEngine:
                 path.rename(old)
             tmp.rename(path)
             shutil.rmtree(old, ignore_errors=True)
-        # snapshot the unindexed id set BEFORE the rebuild, stamp the
-        # intersection with what the rebuilt index actually contains
-        # AFTER it: rows ingested mid-rebuild stay unstamped (a later
-        # pass converges them — never invisible), quarantined rows
-        # never intersect, and previously-indexed rows keep their
-        # original indexed_at instead of the whole _meta being
-        # rewritten on every promote
-        pending = self._pin_ids(
-            self.meta()
-            .filter(~F.coalesce("indexed", F.lit(False)))
-            .select("id")
-        )
+        # pin the unindexed id set on the driver BEFORE the rebuild and
+        # stamp its intersection with the documents the rebuild wrote
+        # to the stats table AFTER it: rows ingested mid-rebuild stay
+        # unstamped (a later pass converges them — never invisible),
+        # a record with no token is not searchable and stays
+        # unstamped, and previously-indexed rows keep their original
+        # indexed_at. Nothing pending: the stamp runs no Spark job.
+        pending = {r[0] for r in self.meta().filter(_unindexed()).select("id").collect()}
         self._rebuild_search_index()
-        newly_searchable = pending.join(
-            self.spark.read.parquet(self.search_index_path)
-            .select("id")
-            .distinct(),
-            "id",
-            "left_semi",
-        )
-        self._mark_indexed(newly_searchable)
+        if pending:
+            searchable = (
+                self.spark.read.schema(DOC_STATS_SCHEMA)
+                .parquet(self.search_stats_path)
+                .join(_id_frame(self.spark, pending), "id", "left_semi")
+                .select("id", "data_type")
+                .collect()
+            )
+            if searchable:
+                self._mark_indexed(
+                    {r[0] for r in searchable}, sorted({r[1] for r in searchable})
+                )
         out = self.records("processed")
         self._log_lineage(
             "promote", self.zone("raw"), self.zone("processed"), -1
@@ -2061,18 +2095,6 @@ class DataLakeEngine:
         finally:
             df.unpersist()
 
-    def _pin_ids(self, ids: DataFrame) -> DataFrame:
-        """A FROZEN snapshot of an id set: collect to the driver and
-        re-parallelize. A lazy plan re-evaluated later would see files
-        written in between; localCheckpoint pins too, but its storage
-        blocks are only reclaimed by the periodic context cleaner
-        (measured: unpersist() does not free them), so a long-lived
-        session leaks one block set per call. Id sets here are
-        metadata-scale by design — the same sets are broadcast to every
-        executor downstream, so the driver copy is not the ceiling."""
-        rows = ids.select("id").distinct().collect()
-        return self.spark.createDataFrame(rows, "id string")
-
     def _mark_indexed(
         self,
         ids: DataFrame | Iterable[str] | None = None,
@@ -2088,10 +2110,9 @@ class DataLakeEngine:
         never deleted while a task could still be reading it. `ids` is an
         id frame, or the distinct ids themselves when the caller holds
         them driver-side. With no `ids`, all currently-unindexed rows are
-        stamped (the full-rebuild path after _rebuild_search_index).
-        `data_types`, when the caller
-        knows them, are the partitions to rewrite; otherwise they are
-        collected from the ids' `_meta` rows.
+        stamped. `data_types`, when the caller knows them, are the
+        partitions to rewrite; otherwise they are collected from the
+        ids' `_meta` rows.
 
         Multi-writer safety (round 5): the whole read-compute-swap runs
         under an exclusive commit lock (sources/commitlog.FileLock), so
@@ -2245,29 +2266,51 @@ class DataLakeEngine:
 
     # -- search surface (SURVEY §2.8) ----------------------------------------
     def _tokenize(self, recs: DataFrame) -> DataFrame:
+        """Postings of `recs` (INDEX_SCHEMA's columns): `dl` is the size
+        of the record's token list and `tf` counts each token in it, so
+        for a record id held once in raw, `dl` = Σtf."""
+        # `dl` is taken before the explode, so the exploded rows carry
+        # a long instead of a copy of the whole token array each
         return (
-            recs.select(
-                "data_type",
-                "id",
-                F.explode(
-                    F.split(F.lower(F.col("payload")), "[^a-z0-9]+")
-                ).alias("token"),
-            )
-            .filter(F.col("token") != "")
+            recs.select("data_type", "id", _tokens(F.col("payload")).alias("tokens"))
+            .withColumn("dl", F.size("tokens").cast("long"))
+            .select("data_type", "id", "dl", F.explode("tokens").alias("token"))
             .groupBy("data_type", "id", "token")
-            .agg(F.count("*").alias("tf"))
+            .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
         )
 
-    def _rebuild_search_index(self) -> DataFrame:
+    def _rebuild_search_index(self) -> None:
         """Reindex-all (X7, index-data-lambda.py:317-388): one
         explode+aggregate replaces the scan→loop→HTTP-bulk pipeline.
-        Index rows: (data_type, id, token, tf) — partitioned by
-        data_type, the analogue of index-per-dataset naming (X2)."""
-        idx = self._tokenize(self.records("raw"))
-        idx.write.mode("overwrite").partitionBy("data_type").parquet(
+        Rewrites the postings and the BM25 document statistics from one
+        listing of raw, both partitioned by data_type (the analogue of
+        index-per-dataset naming, X2).
+
+        The stats table is deleted first and published last, by a
+        rename of its complete staged copy, so it exists only when it
+        matches the postings: a reindex that dies part-way leaves no
+        stats table, and the next BM25 search runs this again
+        (`_ensure_doc_stats`)."""
+        self._recover_zone_swap("raw")
+        raw = self.spark.read.schema(RECORD_SCHEMA).parquet(
+            f"{self.zone('raw')}/records"
+        )
+        staged = self.search_stats_path + ".tmp"
+        fs, stats = self._fs_path(self.search_stats_path)
+        fs.delete(stats, True)
+        self._tokenize(raw).write.mode("overwrite").partitionBy("data_type").parquet(
             self.search_index_path
         )
-        return self.search_index()
+        raw.select(
+            "data_type", "id", F.size(_tokens(F.col("payload"))).cast("long").alias("dl")
+        ).filter(F.col("dl") > 0).write.mode("overwrite").partitionBy(
+            "data_type"
+        ).parquet(staged)
+        # again: a first index append running beside this reindex may
+        # have created the directory, and a rename onto an existing
+        # directory would nest the stage inside it
+        fs.delete(stats, True)
+        fs.rename(self._fs_path(staged)[1], stats)
 
     def _fs_path(self, path: str):
         """(Hadoop FileSystem, Path) of a lake path, local or remote."""
@@ -2296,13 +2339,15 @@ class DataLakeEngine:
         `index_cdc` — the reference's single `index_in_elasticsearch`
         (index-data-lambda.py:390-411). `batch` is pinned driver-side
         `(id, data_type, location)` rows. Tokenizes and appends the raw
-        records of the batch not yet in the index, then stamps what is
-        searchable. Returns the number of ids stamped.
+        records of the batch not yet in the index, appends a BM25 stats
+        row for each searchable document that has none, then stamps
+        what is searchable. Returns the number of ids stamped.
 
         One action finds both sets, reading only the batch's data_type
         partitions of the index and its (data_type, ingest_date)
         partitions of raw, semi-joined against the batch's ids; it
-        returns one row per batch id found, in raw or in the index."""
+        returns one row per batch id found, in raw or in the index, with
+        the document's length `dl` (the stats row's value)."""
         rows = {r["id"]: r for r in batch}
         if not rows:
             return 0
@@ -2315,40 +2360,59 @@ class DataLakeEngine:
             (r["data_type"], r["location"].rsplit("/ingest_date=", 1)[1])
             for r in rows.values()
         }
+        types = {(("data_type", dt),) for dt, _ in parts}
         raw = self._read_partitions(
             f"{self.zone('raw')}/records",
             RECORD_SCHEMA,
             {(("data_type", dt), ("ingest_date", d)) for dt, d in parts},
         )
-        index = self._read_partitions(
-            self.search_index_path,
-            T.StructType(
-                [T.StructField("id", T.StringType()), T.StructField("data_type", T.StringType())]
-            ),
-            {(("data_type", dt),) for dt, _ in parts},
+        index = self._read_partitions(self.search_index_path, INDEX_SCHEMA, types)
+        # An index without a stats table predates the table, or lost it
+        # to a reindex that died part-way: its stats are left to the
+        # reindex the next BM25 search runs, so none is appended to a
+        # table that would then count only some documents.
+        fs, stats_dir = self._fs_path(self.search_stats_path)
+        has_stats_table = fs.exists(stats_dir)
+        fresh = not has_stats_table and not fs.exists(
+            self._fs_path(self.search_index_path)[1]
         )
         # content-keyed idempotence: a writer can die between the index
-        # append and the stamp, and foreachBatch side effects are
-        # at-least-once, so an id already carrying index tokens is never
-        # appended again but is still stamped — it converges to
+        # append, the stats append and the stamp, and foreachBatch side
+        # effects are at-least-once, so an id already carrying index
+        # tokens is never appended again, an id already carrying a
+        # stats row never gets a second one, and each converges to
         # indexed=true. Both sets are pinned BEFORE the append: the
         # parquet relation re-lists files at action time.
         batch_ids = _id_frame(self.spark, rows)
         sides = [
             df.join(batch_ids, "id", "left_semi").select(
-                "id", F.lit(in_index).alias("hit")
+                "id", F.lit(in_index).alias("in_index"), dl.cast("long").alias("dl")
             )
-            for df, in_index in ((index, True), (raw, False))
+            for df, in_index, dl in (
+                (index, True, F.col("dl")),
+                (raw, False, F.size(_tokens(F.col("payload")))),
+            )
             if df is not None
         ]
-        found: dict[str, bool] = {}
+        found = {}
         if sides:
             union = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
             # one row per id: a redelivered batch's postings collapse
             # map-side instead of reaching the driver one per token
-            found = dict(union.groupBy("id").agg(F.max("hit")).collect())
-        new_ids = [i for i, in_index in found.items() if not in_index]
+            found = {
+                r["id"]: r
+                for r in union.groupBy("id")
+                .agg(F.max("in_index").alias("in_index"), F.max("dl").alias("dl"))
+                .collect()
+            }
+        new_ids = [i for i, r in found.items() if not r["in_index"]]
         if new_ids:
+            if fresh:
+                # the first append creates the index: create the stats
+                # table with it, so a crash between the two appends
+                # leaves a table the redelivery completes
+                fs.mkdirs(stats_dir)
+                has_stats_table = True
             # guard the append on non-empty: an unconditional empty
             # append materializes a schema-less (_SUCCESS-only) index
             # dir that breaks every later schema-inferring read with
@@ -2357,6 +2421,39 @@ class DataLakeEngine:
                 raw.join(_id_frame(self.spark, new_ids), "id", "left_semi")
             ).write.mode("append").partitionBy("data_type").parquet(
                 self.search_index_path
+            )
+        if has_stats_table:
+            # A stats row is appended only after its document's
+            # postings, and a reindex writes both from one listing of
+            # raw, so only an id the index already held can have one:
+            # the stats table is read only for a batch carrying such
+            # ids (a redelivery), not on every micro-batch.
+            converged = [i for i, r in found.items() if r["in_index"]]
+            stats = None
+            if converged:
+                stats = self._read_partitions(
+                    self.search_stats_path, DOC_STATS_SCHEMA, types
+                )
+            with_stats = set()
+            if stats is not None:
+                with_stats = {
+                    r[0]
+                    for r in stats.join(
+                        _id_frame(self.spark, converged), "id", "left_semi"
+                    )
+                    .select("id")
+                    .collect()
+                }
+            append_rows(
+                self.spark,
+                self.search_stats_path,
+                [
+                    {"id": i, "dl": r["dl"], "data_type": rows[i]["data_type"]}
+                    for i, r in found.items()
+                    if r["dl"] and i not in with_stats
+                ],
+                DOC_STATS_SCHEMA,
+                partition_by=("data_type",),
             )
         # The index_incremental invariant: stamp only ids that are
         # actually SEARCHABLE — the ones whose tokens just landed plus
@@ -2440,7 +2537,57 @@ class DataLakeEngine:
         return q  # always-on: caller owns stop()
 
     def search_index(self) -> DataFrame:
-        return self.spark.read.parquet(self.search_index_path)
+        """The postings, read with INDEX_SCHEMA given, so no Spark job
+        infers a schema. An index written before postings carried `dl`
+        reads null there."""
+        return self.spark.read.schema(INDEX_SCHEMA).parquet(self.search_index_path)
+
+    def _ensure_doc_stats(self) -> None:
+        """An index with no BM25 stats table (written before the table
+        existed, or left by a reindex that died part-way) gets one full
+        reindex, under the raw zone lock; a second caller waiting on the
+        lock finds the table and returns. No score is computed from
+        missing statistics."""
+        fs, stats = self._fs_path(self.search_stats_path)
+        if fs.exists(stats) or not fs.exists(self._fs_path(self.search_index_path)[1]):
+            return
+        if self.is_remote:
+            self._rebuild_search_index()
+            return
+        self._recover_zone_swap("raw")
+        with self._zone_lock("raw"):
+            if not fs.exists(stats):
+                self._rebuild_search_index()
+
+    def _doc_totals(self, data_type: str | None) -> tuple[int, int]:
+        """(N, Σdl): the stats table's row count and `dl` sum, over
+        `data_type`'s partition or over all. A local root reads the `dl`
+        column on the driver with pyarrow, so no Spark job runs and the
+        driver payload is at most 9 bytes per document in scope (an
+        8-byte `dl` and its validity bit); a remote root aggregates it
+        with Spark."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        path = self.search_stats_path
+        if data_type is not None:
+            path = f"{path}/{partition_dir(self.spark, 'data_type', data_type)}"
+        fs, p = self._fs_path(path)
+        if not fs.exists(p):
+            return 0, 0
+        if self.is_remote:
+            n, total = (
+                self.spark.read.schema(DOC_STATS_SCHEMA)
+                .parquet(path)
+                .agg(F.count(F.lit(1)), F.sum("dl"))
+                .first()
+            )
+            return n, total or 0
+        dl = pq.read_table(
+            path, columns=["dl"], schema=pa.schema([("dl", pa.int64())])
+        )["dl"]
+        return len(dl), pc.sum(dl).as_py() or 0
 
     def search(
         self,
@@ -2456,9 +2603,23 @@ class DataLakeEngine:
         with Okapi BM25 (k1=1.2, b=0.75) over the engine's own inverted
         index — the relevance order OpenSearch would return (x03 is the
         same scoring on the test corpus, value-oracled). Multi-token
-        queries sum per-token BM25. Corpus stats (N, avgdl) ride a
-        single-row broadcast; df is computed only for the queried
-        tokens, so the scoring join touches |matching postings| rows."""
+        queries sum per-token BM25.
+
+        BM25 reads its statistics from the index, as OpenSearch keeps
+        them per segment: each posting carries its document's length
+        `dl`, and N and Σdl of the scope (`data_type`, or the whole
+        index) are read from the stats table on the driver
+        (`_doc_totals`) and joined in as a one-row broadcast relation.
+        The Spark query reads only the postings of the query's tokens
+        and shuffles them once, into one partition (the top-k merge
+        OpenSearch's coordinator does), where df is a count over each
+        token, then scores are summed per id and ordered: three Spark
+        jobs on `collect()`, the shuffle, the broadcast and the result.
+        An index with no stats table is reindexed once first
+        (`_ensure_doc_stats`)."""
+        if term is not None and rank == "bm25":
+            # before the index is listed: a reindex replaces its files
+            self._ensure_doc_stats()
         idx = self.search_index()
         if data_type is not None:
             idx = idx.filter(F.col("data_type") == data_type)
@@ -2471,48 +2632,43 @@ class DataLakeEngine:
         import re as _re
 
         tokens = [t for t in _re.split(r"[^a-z0-9]+", term.lower()) if t]
+        hits = idx.filter(F.col("token").isin(tokens))
         if rank == "tf":
-            return (
-                idx.filter(F.col("token").isin(tokens))
-                .orderBy(F.col("tf").desc(), "id")
-            )
+            return hits.orderBy(F.col("tf").desc(), "id")
         if rank != "bm25":
             raise ValueError(f"unknown rank: {rank!r}")
+        import pyarrow as pa
+
+        n_docs, total_dl = self._doc_totals(data_type)
+        # N and avgdl ride a one-row relation as data: as literals they
+        # would be inlined into the generated code, which would then miss
+        # Spark's code cache each time the corpus changes
+        totals = self.spark.createDataFrame(
+            pa.table(
+                {
+                    "n_docs": pa.array([n_docs], pa.int64()),
+                    "avgdl": [total_dl / n_docs if n_docs else 1.0],
+                }
+            )
+        )
         k1, b = 1.2, 0.75
-        doclen = idx.groupBy("id").agg(F.sum("tf").alias("dl"))
-        stats = doclen.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-        )
-        hits = idx.filter(F.col("token").isin(tokens))
-        dfreq = hits.groupBy("token").agg(
-            F.count_distinct("id").alias("df")
-        )
-        scored = (
-            hits.join(F.broadcast(dfreq), "token")
-            .join(doclen, "id")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "idf",
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-            )
-            .withColumn(
-                "score",
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-                ),
-            )
+        df, tf = F.col("df"), F.col("tf")
+        idf = F.log((F.col("n_docs") - df + 0.5) / (df + 0.5) + 1.0)
+        score = idf * (tf * (k1 + 1)) / (
+            tf + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
         )
         return (
-            scored.groupBy("id")
+            hits.repartition(1)
+            .select(
+                "id",
+                "tf",
+                "dl",
+                F.count(F.lit(1)).over(Window.partitionBy("token")).alias("df"),
+            )
+            .crossJoin(F.broadcast(totals))
+            .groupBy("id")
             .agg(
-                F.round(F.sum("score"), 6).alias("score"),
+                F.round(F.sum(score), 6).alias("score"),
                 F.count("*").alias("n_terms_matched"),
             )
             .orderBy(F.col("score").desc(), "id")
